@@ -39,6 +39,8 @@ from pyspark.sql import functions as F
 from processo_etl_spark.ml.dedup import MERSENNE_P, md5_long, perm_constants
 
 WORD_BITS = 32
+# Column carrying the attached filter array (bloom_words_relation).
+BLOOM_WORDS = "__bloom_words"
 
 
 def _position(h: Column, a: int, b: int, n_bits: int) -> Column:
@@ -152,11 +154,13 @@ def bloom_filter_words(
 def bloom_words_relation(
     df: DataFrame, key_col: str | Column, n_bits: int = 1 << 16, k: int = 4
 ) -> DataFrame:
-    """The filter as a ONE-ROW relation (``words``: dense array<long>,
-    length m/32) — the in-plan twin of :func:`bloom_filter_words`: the
-    same dense word array, built by the same fixed-grid groupBy, but it
-    stays IN the plan and attaches to consumers as a broadcast one-row
-    scalar (``crossJoin(F.broadcast(...))``, the module family's
+    """The filter as a ONE-ROW relation (``__bloom_words``: dense
+    array<long>, length m/32; the reserved name keeps it from colliding
+    with a consumer's own ``words`` column) — the in-plan twin of
+    :func:`bloom_filter_words`: the same dense word array, built by the
+    same fixed-grid groupBy, but it stays IN the plan and attaches to
+    consumers as a broadcast one-row scalar
+    (``crossJoin(F.broadcast(...))``, the module family's
     documented scalar-attach shape) instead of a driver ``collect``
     (r15, guide §5 — no driver round-trip in a query path; the filter
     build becomes one more broadcast-exchange job inside the consuming
@@ -178,7 +182,7 @@ def bloom_words_relation(
                 lambda i: F.coalesce(
                     F.element_at("_m", i), F.lit(0).cast("long")
                 ),
-            ).alias("words")
+            ).alias(BLOOM_WORDS)
         )
     )
 
@@ -191,7 +195,7 @@ def bloom_hit_expr(
     shuffle, whole-stage-codegen friendly (constant-table loops are
     unrolled, not HOF-folded; see SCALE.md on HOFs over constants).
 
-    ``words`` may also be a Column (the ``words`` array of a
+    ``words`` may also be a Column (the ``__bloom_words`` array of a
     :func:`bloom_words_relation` row attached by a broadcast crossJoin)
     — identical arithmetic, the array is just read from the joined row
     instead of a plan literal."""
@@ -248,10 +252,10 @@ def join_bloom_pruned(
         left.crossJoin(F.broadcast(filt))
         .filter(
             bloom_hit_expr(
-                F.col("words"), F.col(left_key).cast("string"), n_bits, k
+                F.col(BLOOM_WORDS), F.col(left_key).cast("string"), n_bits, k
             )
         )
-        .drop("words")
+        .drop(BLOOM_WORDS)
     )
     return pruned.join(right, pruned[left_key] == right[right_key])
 
@@ -327,8 +331,8 @@ def bloom_contamination(
         ).alias("gram"),
     ).crossJoin(F.broadcast(filt))
     flagged = corpus_grams.withColumn(
-        "bloom_hit", bloom_hit_expr(F.col("words"), F.col("gram"), n_bits, k)
-    ).drop("words")
+        "bloom_hit", bloom_hit_expr(F.col(BLOOM_WORDS), F.col("gram"), n_bits, k)
+    ).drop(BLOOM_WORDS)
     exact = flagged.join(
         F.broadcast(eval_grams.withColumn("exact_hit", F.lit(1))), "gram", "left"
     )

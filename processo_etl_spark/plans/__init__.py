@@ -73,20 +73,9 @@ _PLAN_MODULES = (
     "media",
     "privacy",
     "profile",
-    # r11 activation (VERDICT r10 #2): the ten heads banked in r10 —
-    # differentially tested (tests/test_staged_r11.py) and three-scale
-    # pre-swept (30/30 hash-matched, SCALE.md) — now register and fill
-    # tier-1 (ungraded oracle-backed) slots ahead of re-certification.
-    "staged_r11",
-    # r12 (VERDICT r11 #4): streaming⇔batch equivalence certificates
-    # for the remaining eight stream_* jobs — oracle-backed, so they
-    # fill tier-1 slots ahead of the r4-era re-certification fill.
+    # streaming⇔batch equivalence certificates for the stream_* jobs —
+    # oracle-backed, so they fill tier-1 slots ahead of re-certification.
     "stream_equiv",
-    # r13 activation (VERDICT r12 #1): the three heads banked in r12 —
-    # differentially tested (tests/test_staged_r13.py) and multi-scale
-    # pre-swept (SCALE.md r12) — now register and fill tier-1
-    # (ungraded oracle-backed) slots ahead of re-certification.
-    "staged_r13",
 )
 
 # Driver-visibility window (VERDICT r1 #1, rotated per VERDICT r4 #1): the
@@ -282,7 +271,7 @@ _ROTATION_HEADS = (
     # "no_oracle", now recognized as certifying by _grade_rounds; the
     # r10-era claim that the pool would be empty was wrong only because
     # a synthetic simulation file used err: None for rows-only rows).
-    # The TEN staged_r11 heads (sample_per_key_deterministic,
+    # The TEN r10-banked heads (sample_per_key_deterministic,
     # split_temporal_embargo, feature_binning_equidepth,
     # anomaly_rolling_zscore, markov_event_transitions,
     # changepoint_cusum_alerts, events_debounce_lag,

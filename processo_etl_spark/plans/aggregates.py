@@ -1,5 +1,6 @@
 """Aggregation plans: the flagship pricing summary plus the notebook's
-EDA/data-quality workload (SURVEY.md §2.5 A1–A10) and OLAP extensions.
+EDA/data-quality workload (SURVEY.md §2.5 A1–A10) and OLAP extensions,
+including equi-depth binning and the exact weighted median.
 
 Numeric convention (plans/__init__): exact DECIMAL arithmetic internally
 for order-insensitive sums, but every final output column is DOUBLE
@@ -1092,4 +1093,141 @@ def impute_median_by_group(spark, sf_dir):
         )
         .otherwise(F.col("l_quantity"))
         .alias("qty_imputed"),
+    )
+
+
+_NTILE_K = 8
+
+
+BINNING_ORACLE = f"""
+    WITH b AS (
+      SELECT l_extendedprice,
+             ntile({_NTILE_K}) OVER (ORDER BY l_extendedprice, l_orderkey,
+                                     l_linenumber, l_partkey, l_suppkey)
+               AS bin
+      FROM lineitem)
+    SELECT CAST(bin AS BIGINT) AS bin,
+           CAST(count(*) AS BIGINT) AS n,
+           min(l_extendedprice) AS lo,
+           max(l_extendedprice) AS hi
+    FROM b GROUP BY bin
+"""
+
+
+@register("feature_binning_equidepth", BINNING_ORACLE)
+def feature_binning_equidepth(spark, sf_dir):
+    """Equal-frequency (equi-depth) feature binning: NTILE(8) over
+    l_extendedprice — the quantile-bucket featurizer (and the histogram
+    a cost-based optimizer keeps).  Each bin row carries its exact
+    count and min/max boundary values.
+
+    Scale shape: operators/ranking.distributed_ntile — range partition
+    + per-partition offsets, never a one-task global window; the bin
+    stats are one combinable groupBy.  The order is made TOTAL with
+    the (l_orderkey, l_linenumber, l_partkey, l_suppkey) suffix (the
+    r10 layout lesson: the fixture's natural key is not unique), so
+    bin membership is deterministic on both engines; min/max per bin
+    are source passthroughs.
+    """
+    from processo_etl_spark.operators.ranking import distributed_ntile
+
+    li = t(spark, sf_dir, "lineitem").select(
+        "l_extendedprice", "l_orderkey", "l_linenumber", "l_partkey",
+        "l_suppkey",
+    )
+    binned = distributed_ntile(
+        li,
+        [
+            "l_extendedprice",
+            "l_orderkey",
+            "l_linenumber",
+            "l_partkey",
+            "l_suppkey",
+        ],
+        _NTILE_K,
+        out_col="bin",
+    )
+    return (
+        binned.groupBy("bin")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("l_extendedprice").alias("lo"),
+            F.max("l_extendedprice").alias("hi"),
+        )
+        .select(F.col("bin").cast("long").alias("bin"), "n", "lo", "hi")
+    )
+
+
+WEIGHTED_MEDIAN_ORACLE = """
+    WITH h AS (
+      SELECT l_returnflag AS flag, l_extendedprice AS price,
+             CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS w
+      FROM lineitem GROUP BY 1, 2),
+    c AS (
+      SELECT flag, price, w,
+             CAST(sum(w) OVER (PARTITION BY flag ORDER BY price)
+                  AS BIGINT) AS cw,
+             CAST(sum(w) OVER (PARTITION BY flag) AS BIGINT) AS tw
+      FROM h)
+    SELECT flag AS l_returnflag, tw AS w_total,
+           min(price) AS weighted_median_price
+    FROM c WHERE 2 * cw >= tw GROUP BY flag, tw
+"""
+
+
+@register("weighted_median_price_by_flag", WEIGHTED_MEDIAN_ORACLE)
+def weighted_median_price_by_flag(spark, sf_dir):
+    """EXACT weighted median (lower/type-1: smallest v with
+    2·cumweight(v) ≥ totalweight) of l_extendedprice per l_returnflag,
+    weighted by l_quantity — the robust center a revenue-weighted
+    report needs, where the plain median over rows answers the wrong
+    question.
+
+    Scale shape — no per-group global window anywhere: (1) a
+    combinable histogram groupBy on (flag, price) collapses the fact
+    table to distinct pairs; (2) ``operators/ranking.distributed_cumsum``
+    over the TOTAL order (flag, price) gives the running weight with
+    range partitioning + per-partition offsets (histogram rows per
+    group can be huge at scale — a ``PARTITION BY flag`` window would
+    sort each group in one task); (3) each flag's cum-before-group base
+    and its total come from the |flags|-row dimension (broadcast), so
+    the per-flag cumulative is cum − base; (4) the median is
+    ``min(price) WHERE 2·(cum − base) ≥ total`` — a filter + combinable
+    min.  Weights are exact BIGINTs (l_quantity is integral 1..50);
+    every comparison is integer; the median itself is a source
+    passthrough.
+    """
+    from pyspark.sql import Window
+
+    from processo_etl_spark.operators.ranking import distributed_cumsum
+
+    li = t(spark, sf_dir, "lineitem").select(
+        F.col("l_returnflag").alias("flag"),
+        F.col("l_extendedprice").alias("price"),
+        F.col("l_quantity").cast("long").alias("w"),
+    )
+    hist = li.groupBy("flag", "price").agg(F.sum("w").alias("w"))
+    cum = distributed_cumsum(hist, ["flag", "price"], "w", out_col="cw")
+    # totals come from the CUMSUM OUTPUT, whose ranged input is already
+    # persisted inside distributed_cumsum — deriving them from `hist`
+    # would re-scan and re-aggregate the whole fact table (the cache
+    # manager never substitutes the persisted superset plan for the
+    # narrower hist).
+    totals = cum.groupBy("flag").agg(F.sum("w").alias("tw"))
+    base = totals.withColumn(
+        "base",
+        F.coalesce(
+            F.sum("tw").over(
+                Window.orderBy("flag").rowsBetween(
+                    Window.unboundedPreceding, -1
+                )
+            ),
+            F.lit(0),
+        ),
+    )
+    return (
+        cum.join(F.broadcast(base), "flag")
+        .filter(2 * (F.col("cw") - F.col("base")) >= F.col("tw"))
+        .groupBy(F.col("flag").alias("l_returnflag"), F.col("tw").alias("w_total"))
+        .agg(F.min("price").alias("weighted_median_price"))
     )

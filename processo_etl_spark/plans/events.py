@@ -1,6 +1,8 @@
 """Event-stream plans (SURVEY.md §2.9 — extension beyond the batch-only
 reference): tumbling/sliding windows, sessionization, and a genuine
-Structured Streaming entry (rows-only).
+Structured Streaming entry (rows-only), plus per-key event analytics —
+deterministic sampling, embargoed temporal splits, rolling z-score and
+CUSUM monitors, Markov transitions and lag debounce.
 
 Batch and streaming share the same window semantics: the batch plans
 here are the oracle-checked equivalents of streaming/jobs.py.
@@ -13,6 +15,7 @@ from pyspark.sql import functions as F
 
 from processo_etl_spark.plans import register
 from processo_etl_spark.plans.common import dec, t
+from processo_etl_spark.plans.mlops import _md5_long_sql
 
 
 @register(
@@ -1848,4 +1851,423 @@ def stream_batch_equiv_tumbling(spark, sf_dir):
         F.count("b_n").cast("bigint").alias("n_windows_batch"),
         F.sum("b_n").cast("bigint").alias("total_events"),
         F.sum(disagree.cast("long")).cast("bigint").alias("n_mismatch"),
+    )
+
+
+_SAMPLE_K = 5
+
+
+SAMPLE_PER_KEY_ORACLE = f"""
+    WITH h AS (
+      SELECT user_id, event_id,
+             {_md5_long_sql("'sample:' || CAST(event_id AS VARCHAR)")} AS hk
+      FROM events),
+    r AS (
+      SELECT user_id, event_id,
+             row_number() OVER (PARTITION BY user_id
+                                ORDER BY hk, event_id) AS rk
+      FROM h)
+    SELECT user_id, event_id, CAST(rk AS BIGINT) AS rk
+    FROM r WHERE rk <= {_SAMPLE_K}
+"""
+
+
+@register("sample_per_key_deterministic", SAMPLE_PER_KEY_ORACLE)
+def sample_per_key_deterministic(spark, sf_dir):
+    """Deterministic per-key uniform sample — bottom-k by md5 rank
+    (k=5 events per user).
+
+    The selection primitive a training-data pipeline needs when
+    "sample 5 documents per source" must be reproducible across runs,
+    engines, and partitionings: rank rows inside each key by a content
+    hash (md5 of the unique event id) and keep the k smallest.
+    Bottom-k-by-hash IS the classic mergeable uniform sample (KMV): the
+    chosen set is a uniform k-subset under the hash's uniformity, needs
+    no RNG state, and two shards' samples merge by re-taking bottom-k.
+
+    Scale shape: operators/ranking.grouped_topk — the salted two-stage
+    rank with bounded task state (|group|/64 under any skew), provably
+    equal to the single grouped window.  Output: the sampled rows'
+    (user_id, event_id, rk) — integers only.
+    """
+    from processo_etl_spark.operators.ranking import grouped_topk
+
+    ev = t(spark, sf_dir, "events").select("user_id", "event_id")
+    hk = F.col("__h")
+    picked = grouped_topk(
+        ev.withColumn(
+            "__h", _md5_rank(F.col("event_id"))
+        ),
+        ["user_id"],
+        [hk.asc(), F.col("event_id").asc()],
+        _SAMPLE_K,
+        salt_key=F.col("event_id"),
+    )
+    return picked.select("user_id", "event_id", F.col("rk").cast("long").alias("rk"))
+
+
+def _md5_rank(c):
+    from processo_etl_spark.ml.dedup import md5_long
+
+    return md5_long(F.concat(F.lit("sample:"), c.cast("string")))
+
+
+_CUTOFF = "2024-01-20 00:00:00"
+_EMBARGO_DAYS = 2
+_TEST_START = "2024-01-22 00:00:00"
+
+
+SPLIT_EMBARGO_ORACLE = f"""
+    SELECT user_id,
+           CAST(SUM(CASE WHEN ts < TIMESTAMP '{_CUTOFF}'
+                    THEN 1 ELSE 0 END) AS BIGINT) AS n_train,
+           CAST(SUM(CASE WHEN ts >= TIMESTAMP '{_TEST_START}'
+                    THEN 1 ELSE 0 END) AS BIGINT) AS n_test,
+           CAST(SUM(CASE WHEN ts >= TIMESTAMP '{_CUTOFF}'
+                          AND ts < TIMESTAMP '{_TEST_START}'
+                    THEN 1 ELSE 0 END) AS BIGINT) AS n_embargoed,
+           (max(CASE WHEN ts < TIMESTAMP '{_CUTOFF}' THEN ts END) IS NULL
+            OR min(CASE WHEN ts >= TIMESTAMP '{_TEST_START}' THEN ts END)
+               IS NULL
+            OR max(CASE WHEN ts < TIMESTAMP '{_CUTOFF}' THEN ts END)
+               + INTERVAL {_EMBARGO_DAYS} DAYS
+              <= min(CASE WHEN ts >= TIMESTAMP '{_TEST_START}' THEN ts END))
+             AS leakage_safe
+    FROM events GROUP BY user_id
+"""
+
+
+@register("split_temporal_embargo", SPLIT_EMBARGO_ORACLE)
+def split_temporal_embargo(spark, sf_dir):
+    """Leakage-safe temporal train/test split with an embargo gap —
+    the backtesting discipline for time-ordered training data: train =
+    events strictly before the cutoff, test = events at/after cutoff +
+    embargo (2 days), rows inside the gap are QUARANTINED (neither
+    side) so near-boundary leakage (labels computed from horizons that
+    cross the cutoff) cannot occur.
+
+    Emits one row per user: n_train / n_test / n_embargoed exact
+    counts plus ``leakage_safe`` — max(train ts) + embargo ≤ min(test
+    ts), vacuously true when either side is empty — re-derived from the
+    row-level timestamps, so a broken boundary predicate lands False
+    and breaks the hash.  One combinable groupBy; the cutoff literals
+    push to the scan.
+    """
+    ev = t(spark, sf_dir, "events").select("user_id", "ts")
+    cutoff = F.lit(_CUTOFF).cast("timestamp_ntz")
+    test_start = F.lit(_TEST_START).cast("timestamp_ntz")
+    is_train = F.col("ts") < cutoff
+    is_test = F.col("ts") >= test_start
+    return (
+        ev.groupBy("user_id")
+        .agg(
+            F.sum(is_train.cast("long")).alias("n_train"),
+            F.sum(is_test.cast("long")).alias("n_test"),
+            F.sum((~is_train & ~is_test).cast("long")).alias("n_embargoed"),
+            F.max(F.when(is_train, F.col("ts"))).alias("__mx_tr"),
+            F.min(F.when(is_test, F.col("ts"))).alias("__mn_te"),
+        )
+        .select(
+            "user_id",
+            "n_train",
+            "n_test",
+            "n_embargoed",
+            (
+                F.col("__mx_tr").isNull()
+                | F.col("__mn_te").isNull()
+                | (
+                    F.col("__mx_tr") + F.expr(f"INTERVAL {_EMBARGO_DAYS} DAYS")
+                    <= F.col("__mn_te")
+                )
+            ).alias("leakage_safe"),
+        )
+    )
+
+
+_Z_WIN = 6       # ROWS 6 PRECEDING + current = 7-row rolling frame
+_Z_MIN_N = 4     # no verdict on frames shorter than this
+_Z_K2 = 9        # z² threshold (3σ)
+
+
+ANOMALY_ZSCORE_ORACLE = f"""
+    WITH d AS (
+      SELECT user_id, event_id,
+             CAST(round(value * 100) AS BIGINT) AS x,
+             CAST(count(*) OVER w AS BIGINT) AS n_base,
+             CAST(COALESCE(sum(CAST(round(value * 100) AS BIGINT)) OVER w,
+                           0) AS BIGINT) AS s_centi,
+             CAST(COALESCE(sum(CAST(round(value * 100) AS BIGINT)
+                               * CAST(round(value * 100) AS BIGINT)) OVER w,
+                           0) AS BIGINT) AS q_centi
+      FROM events
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+                   ROWS BETWEEN {_Z_WIN} PRECEDING AND 1 PRECEDING))
+    SELECT user_id, event_id, n_base, s_centi, q_centi,
+           (n_base >= {_Z_MIN_N}
+            AND ((n_base * q_centi - s_centi * s_centi = 0
+                  AND n_base * x - s_centi <> 0)
+                 OR (n_base * x - s_centi) * (n_base * x - s_centi)
+                    > {_Z_K2} * (n_base * q_centi - s_centi * s_centi)))
+             AS is_outlier
+    FROM d
+"""
+
+
+@register("anomaly_rolling_zscore", ANOMALY_ZSCORE_ORACLE)
+def anomaly_rolling_zscore(spark, sf_dir):
+    """Per-key rolling z-score anomaly flags — the monitoring/feature
+    primitive (is this event >3σ from its user's recent behavior?) —
+    with ZERO floats in the verdict.
+
+    The baseline frame EXCLUDES the current row (ROWS 6 PRECEDING TO
+    1 PRECEDING): self-inclusion caps z² at n−1 (a lone spike among 7
+    values can never reach 3σ — measured, not guessed), and comparing
+    against prior history is the anomaly semantics anyway.  value is
+    centi-scaled to exact integers (the fixture is 2-decimal;
+    ROUND(·*100) is identical on both engines away from .5 ties), the
+    frame keeps running S=Σx and Q=Σx² as integer window sums (O(1)
+    sliding state per row, one shuffle on the key), and the 3σ test
+    uses the algebraic form (numerically cross-checked against the
+    float z-score over 2000 random frames)
+
+        z² > 9  ⇔  (n·x − S)² > 9·(n·Q − S²)
+
+    (σ² over the baseline = (nQ − S²)/n², z = (x − S/n)/σ, so
+    z² = (nx − S)²/(nQ − S²)) — pure
+    BIGINT arithmetic (|x| ≤ 5·10⁴ centi, n ≤ 6 ⇒ every term ≲ 10¹²),
+    so the boolean is bit-identical on any engine without a tolerance
+    margin, the same discipline as the fixed-point EWMA.  A
+    zero-variance baseline flags any deviation (dev ≠ 0); baselines
+    shorter than 4 rows emit false.  Outputs: the baseline's exact
+    integer moments + the verdict.
+    """
+    from pyspark.sql import Window
+
+    ev = t(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id", "value"
+    )
+    x = F.round(F.col("value") * 100, 0).cast("long")
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(-_Z_WIN, -1)
+    )
+    d = (
+        ev.withColumn("__x", x)
+        .withColumn("n_base", F.count(F.lit(1)).over(w))
+        .withColumn("s_centi", F.coalesce(F.sum("__x").over(w), F.lit(0)))
+        .withColumn(
+            "q_centi",
+            F.coalesce(
+                F.sum(F.col("__x") * F.col("__x")).over(w), F.lit(0)
+            ),
+        )
+    )
+    n, s, q, xv = (
+        F.col("n_base"),
+        F.col("s_centi"),
+        F.col("q_centi"),
+        F.col("__x"),
+    )
+    var_n2 = n * q - s * s  # n²·σ² in centi² — exact integer
+    dev = n * xv - s        # n·(x − μ) in centi — exact integer
+    return d.select(
+        "user_id",
+        "event_id",
+        n.cast("long").alias("n_base"),
+        s.cast("long").alias("s_centi"),
+        q.cast("long").alias("q_centi"),
+        (
+            (n >= _Z_MIN_N)
+            & (
+                ((var_n2 == 0) & (dev != 0))
+                | (dev * dev > F.lit(_Z_K2) * var_n2)
+            )
+        ).alias("is_outlier"),
+    )
+
+
+MARKOV_TRANSITIONS_ORACLE = """
+    WITH s AS (
+      SELECT event_type AS src_type,
+             lead(event_type) OVER (PARTITION BY user_id
+                                    ORDER BY ts, event_id) AS dst_type
+      FROM events)
+    SELECT src_type, dst_type,
+           CAST(count(*) AS BIGINT) AS n_pairs,
+           CAST(sum(count(*)) OVER (PARTITION BY src_type) AS BIGINT)
+             AS n_src_out
+    FROM s WHERE dst_type IS NOT NULL
+    GROUP BY src_type, dst_type
+"""
+
+
+@register("markov_event_transitions", MARKOV_TRANSITIONS_ORACLE)
+def markov_event_transitions(spark, sf_dir):
+    """Event-type Markov transition counts — the journey/path model a
+    product-analytics (and agent-trajectory) pipeline fits first: for
+    every ordered pair (src, dst) of CONSECUTIVE events within a user's
+    timeline, the exact pair count plus the src row-total (the
+    denominator of the transition probability, left as an exact integer
+    so the output is float-free; P(dst|src) = n_pairs / n_src_out is
+    one client-side division).
+
+    Scale shape: one ``lead`` window per user (single shuffle on
+    user_id, O(1) sliding state), then a combinable groupBy on the
+    (src, dst) pair; the trailing per-src total is a window over the
+    GROUPED result — |event_types|² rows, a dimension, never the fact
+    table.  Consecutive-pair counting distinguishes this from
+    ``sequence_double_click_purchase`` (pattern existence) and
+    ``events_pagerank_journeys`` (stationary mass): this head is the
+    raw first-order chain those consume.
+    """
+    from pyspark.sql import Window
+
+    ev = t(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id", "event_type"
+    )
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    pairs = (
+        ev.withColumn("__dst", F.lead("event_type").over(w))
+        .filter(F.col("__dst").isNotNull())
+        .groupBy(
+            F.col("event_type").alias("src_type"),
+            F.col("__dst").alias("dst_type"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_pairs"))
+    )
+    return pairs.withColumn(
+        "n_src_out",
+        F.sum("n_pairs").over(Window.partitionBy("src_type")),
+    )
+
+
+_C_K = 6000    # CUSUM drift allowance, centi-units (60.00)
+_C_H = 20000   # alert threshold, centi-units (200.00)
+
+
+CUSUM_ORACLE = f"""
+    WITH d AS (
+      SELECT user_id, ts, event_id,
+             CAST(sum(CAST(round(value * 100) AS BIGINT) - {_C_K})
+                  OVER w AS BIGINT) AS p
+      FROM events
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+    e AS (
+      SELECT user_id, event_id, p,
+             min(p) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                          ROWS BETWEEN UNBOUNDED PRECEDING
+                          AND CURRENT ROW) AS mp
+      FROM d)
+    SELECT user_id, event_id,
+           CAST(p - least(0, mp) AS BIGINT) AS s_cusum,
+           (p - least(0, mp) > {_C_H}) AS is_alert
+    FROM e
+"""
+
+
+@register("changepoint_cusum_alerts", CUSUM_ORACLE)
+def changepoint_cusum_alerts(spark, sf_dir):
+    """Per-key one-sided CUSUM changepoint/shift detection with ZERO
+    floats in the statistic — the sequential monitor for "has this
+    user's value level shifted upward?".
+
+    The textbook recurrence S_i = max(0, S_{i-1} + x_i − k) is
+    sequential, but it has an exact windowable closed form: with
+    P_i = Σ_{t≤i}(x_t − k) (and P_0 = 0),
+
+        S_i = P_i − min(0, min_{j≤i} P_j)
+
+    (the running reset-to-zero floor IS the running minimum of the
+    drifted prefix sum), so two same-spec running windows — a running
+    sum and a running min over it — compute the whole CUSUM path with
+    one shuffle on the key and O(1) sliding state, no recursion, no
+    UDF.  value is centi-scaled to exact BIGINTs (the rolling-zscore
+    discipline: the fixture is 2-decimal, ROUND(·*100) matches on both
+    engines away from .5 ties), k = 60.00 sits above the global mean
+    (≈50) so the statistic drains between bursts, and h = 200.00 makes
+    alerts rare-but-present.  Alerts do NOT reset the statistic
+    (non-restarting upper CUSUM — the page-level variant would clamp
+    after each alarm, which is inherently sequential).  Output: the
+    exact integer CUSUM path + the alert verdict, bit-identical on any
+    engine.
+    """
+    from pyspark.sql import Window
+
+    ev = t(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id", "value"
+    )
+    x = F.round(F.col("value") * 100, 0).cast("long")
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    d = ev.withColumn("__p", F.sum(x - F.lit(_C_K)).over(w)).withColumn(
+        "__m", F.min("__p").over(w)
+    )
+    s = F.col("__p") - F.least(F.lit(0).cast("long"), F.col("__m"))
+    return d.select(
+        "user_id",
+        "event_id",
+        s.alias("s_cusum"),
+        (s > _C_H).alias("is_alert"),
+    )
+
+
+_DEBOUNCE_US = 86_400_000_000  # 24 h in microseconds
+
+
+DEBOUNCE_ORACLE = f"""
+    WITH g AS (
+      SELECT user_id, event_id,
+             epoch_us(ts) - lag(epoch_us(ts))
+               OVER (PARTITION BY user_id, event_type
+                     ORDER BY ts, event_id) AS gap_us
+      FROM events)
+    SELECT user_id, event_id, CAST(gap_us AS BIGINT) AS gap_us
+    FROM g
+    WHERE gap_us IS NULL OR gap_us >= {_DEBOUNCE_US}
+"""
+
+
+@register("events_debounce_lag", DEBOUNCE_ORACLE)
+def events_debounce_lag(spark, sf_dir):
+    """Lag-based per-(user, event_type) debounce — the daily-digest /
+    notification-throttle primitive: keep an event only when at least
+    24 h passed since the PREVIOUS event of the same type for the same
+    user (the first occurrence always survives).  Content-blind
+    rate-collapse, complementing the content-hash dedup family and the
+    gap SESSIONIZER (which groups rather than drops).
+
+    Lag-relative (each row compares to its immediate predecessor), not
+    kept-relative: the true "relative to last KEPT row" debounce is a
+    sequential recurrence with no windowable closed form — documented
+    here so nobody silently assumes the stronger semantics.  One lag
+    window per (user_id, event_type) — single shuffle, O(1) state; the
+    gap is an exact microsecond BIGINT via the repo's
+    ``unix_micros ⇔ epoch_us`` convention (the fixture carries
+    microsecond precision, so second-truncated arithmetic would
+    off-by-one across engines).  Output: the surviving rows plus their
+    gap (NULL on each key's first row).
+    """
+    from pyspark.sql import Window
+
+    ev = t(spark, sf_dir, "events").select(
+        "user_id", "event_type", "ts", "event_id"
+    )
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    w = Window.partitionBy("user_id", "event_type").orderBy(
+        "ts", "event_id"
+    )
+    gap = us - F.lag(us).over(w)
+    return (
+        ev.withColumn("__gap", gap)
+        .filter(F.col("__gap").isNull() | (F.col("__gap") >= _DEBOUNCE_US))
+        .select(
+            "user_id",
+            "event_id",
+            F.col("__gap").cast("long").alias("gap_us"),
+        )
     )

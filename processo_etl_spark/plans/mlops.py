@@ -3264,3 +3264,119 @@ def bm25_topk_hash_join_scan(spark, sf_dir):
     return invindex.bm25_topk(
         docs, postings, "doc_id", "text", ["hash", "join", "scan"], k=10
     )
+
+
+# Argmax encoding base: kept = max over members of
+#   q1000 * _ENC + (_ENC - 1 - doc_id)
+# — quality first (q1000 = quality_score in exact thousandths, the
+# score's own floor-scaled grid), then SMALLEST doc id as the
+# deterministic tie-break (ties are common: identical duplicate text
+# scores identically).  _ENC = 10^12 keeps the encoding exact in int64
+# (q1000 <= 1000 -> k <= ~1e15 << 2^63) and leaves headroom for the
+# key-shifted stress corpora (doc ids at sf2.5 reach ~25e9 << 1e12).
+_ENC = 10**12
+
+
+# The oracle replays the full pipeline in SQL: the shared LSH CTEs
+# (same md5-prefix hash constants as ml/dedup), the recursive
+# transitive-closure CC (exact at gate scale), the text_quality_score
+# feats fragment (hash-green since its registration), and the same
+# integer argmax.  All outputs BIGINT — with-recursive appears in the
+# SQL, so the raw-double-fold guard applies and is satisfied by having
+# no double outputs at all.
+DEDUP_CANONICAL_ORACLE = f"""
+    WITH RECURSIVE {_LSH_CTES},
+    edges AS (
+      SELECT id_a, id_b FROM verified WHERE jaccard >= 0.2),
+    und AS (
+      SELECT id_a AS a, id_b AS b FROM edges
+      UNION SELECT id_b, id_a FROM edges),
+    reach AS (
+      SELECT a, b FROM und
+      UNION
+      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+    cl AS (
+      SELECT a AS doc, least(a, min(b)) AS cluster FROM reach GROUP BY a),
+    feats AS (
+      SELECT doc_id,
+        len(string_split({_NORM}, ' ')) AS n_tokens,
+        length(text) AS n_chars_m,
+        len(regexp_extract_all(text, '[^\\w\\s]')) AS punct,
+        CAST(len(list_filter(string_split({_NORM}, ' '),
+             x -> x IN ('the','a','of','and','to','in','is','it','that','for'))) AS DOUBLE)
+          / CAST(greatest(len(string_split({_NORM}, ' ')), 1) AS DOUBLE) AS sw_ratio
+      FROM documents),
+    q AS (
+      SELECT doc_id,
+        CAST(FLOOR((least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4
+             + least(sw_ratio * 5.0, 1.0) * 0.3
+             + (1.0 - least(CAST(punct AS DOUBLE) / CAST(greatest(n_chars_m, 1) AS DOUBLE) * 10.0, 1.0)) * 0.3
+              ) * 1000) AS BIGINT) AS q1000
+      FROM feats),
+    agg AS (
+      SELECT cl.cluster, count(*) AS n_members,
+             max(q.q1000 * {_ENC} + ({_ENC} - 1 - cl.doc)) AS mk
+      FROM cl JOIN q ON q.doc_id = cl.doc
+      GROUP BY 1)
+    SELECT CAST(cluster AS BIGINT) AS cluster,
+           CAST({_ENC} - 1 - (mk % {_ENC}) AS BIGINT) AS kept_doc,
+           CAST(mk // {_ENC} AS BIGINT) AS q1000_kept,
+           CAST(n_members AS BIGINT) AS n_members,
+           CAST(n_members - 1 AS BIGINT) AS n_dropped
+    FROM agg
+"""
+
+
+@register("dedup_cluster_canonical", DEDUP_CANONICAL_ORACLE)
+def dedup_cluster_canonical(spark, sf_dir):
+    """One canonical document per duplicate cluster, chosen by quality.
+
+    Pipeline: MinHash-LSH candidate pairs (banded, never all-pairs) →
+    connected components (min-label propagation, O(log D) rounds) →
+    join each member's floor-scaled quality score → ONE combinable
+    groupBy per cluster with an integer argmax key (max over
+    q1000·10¹² + (10¹²−1−doc)), so the representative choice is exact,
+    deterministic, and engine-portable — no raw-double comparison, no
+    window sort.  Emits (cluster, kept_doc, q1000_kept, n_members,
+    n_dropped); singleton documents (no near-dup edge) are trivially
+    kept and not emitted, matching dedup_clusters' membership.
+
+    100 TB shape: the only additions over the certified dedup_clusters
+    plan are one broadcast-or-shuffle equi-join on doc id against the
+    narrow (doc_id, q1000) relation and one map-side-combinable
+    groupBy on the cluster label — both on the natural keys the
+    clustering already shuffled.  The cleaned-corpus writer is then an
+    anti-join of the corpus against (member − kept), the exact
+    incremental-dedup shape plans/incremental.py certifies."""
+    from processo_etl_spark.ml import dedup, textstats
+
+    docs = t(spark, sf_dir, "documents")
+    pairs = dedup.minhash_lsh_pairs(
+        docs, "doc_id", "text", k=8, bands=2, threshold=0.2
+    )
+    members = dedup.connected_components(pairs)  # (doc, cluster)
+    q = textstats.quality_features(docs, "text").select(
+        F.col("doc_id"),
+        # quality_score is floor(score*1000)/1000 — an exact multiple
+        # of 1/1000, so round(x*1000) recovers the integer grid value
+        # (floor again could slip one ulp under the /1000·1000 trip).
+        F.round(F.col("quality_score") * 1000).cast("long").alias("q1000"),
+    )
+    k = F.col("q1000") * F.lit(_ENC) + (F.lit(_ENC - 1) - F.col("doc"))
+    return (
+        members.join(q, members.doc == q.doc_id)
+        .groupBy("cluster")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_members"),
+            F.max(k).alias("mk"),
+        )
+        .select(
+            F.col("cluster").cast("bigint").alias("cluster"),
+            (F.lit(_ENC - 1) - F.col("mk") % F.lit(_ENC))
+            .cast("bigint")
+            .alias("kept_doc"),
+            F.expr(f"mk div {_ENC}").cast("bigint").alias("q1000_kept"),
+            F.col("n_members"),
+            (F.col("n_members") - 1).cast("bigint").alias("n_dropped"),
+        )
+    )

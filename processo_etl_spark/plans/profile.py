@@ -5,8 +5,9 @@ functional-dependency audits and categorical concentration
 (quality/profile.py), small-file compaction planning
 (operators/maintenance.py), k-core graph degeneracy
 (operators/graph.kcore_peel) over the shared customer→order→part
-graph, linear multi-touch attribution (operators/temporal), and
-GroupKFold splits (ml/splits).
+graph plus its sampled triangle estimate, linear multi-touch
+attribution (operators/temporal), GroupKFold splits (ml/splits), and
+the Benford first-digit audit.
 
 Oracle-parity design: outputs are exact integers/booleans (group
 counts, violation counts, bin ids from integer division, peel
@@ -369,6 +370,108 @@ def graph_kcore_order_parts(spark, sf_dir):
 
     return graph.kcore_peel(
         pagerank_order_graph_edges(spark, sf_dir), k=3, rounds=6
+    )
+
+
+_TRI_DEN = 4                    # keep an edge iff hash % 4 == 0 (p = 1/4)
+_TRI_SCALE = _TRI_DEN ** 3      # 64: each triangle survives with p³
+
+
+TRIANGLE_SAMPLED_ORACLE = f"""
+    WITH pairs AS (
+      SELECT DISTINCT l_orderkey AS g, l_partkey AS i FROM lineitem),
+    e AS (
+      SELECT DISTINCT p1.i AS a, p2.i AS b
+      FROM pairs p1 JOIN pairs p2 ON p1.g = p2.g AND p1.i < p2.i),
+    s AS (
+      SELECT a, b FROM e
+      WHERE {_md5_long_sql(
+          "'tri:' || CAST(a AS VARCHAR) || ':' || CAST(b AS VARCHAR)"
+      )} % {_TRI_DEN} = 0),
+    tri AS (
+      SELECT count(*) AS t
+      FROM s e1
+      JOIN s e2 ON e2.a = e1.a AND e2.b > e1.b
+      JOIN s e3 ON e3.a = e1.b AND e3.b = e2.b)
+    SELECT CAST((SELECT count(*) FROM e) AS BIGINT) AS n_edges_total,
+           CAST((SELECT count(*) FROM s) AS BIGINT) AS n_edges_sampled,
+           CAST(tri.t AS BIGINT) AS tri_sampled,
+           CAST(tri.t * {_TRI_SCALE} AS BIGINT) AS est_triangles
+    FROM tri
+"""
+
+
+@register("graph_triangle_estimate_sampled", TRIANGLE_SAMPLED_ORACLE)
+def graph_triangle_estimate_sampled(spark, sf_dir):
+    """DOULION-style triangle estimation by deterministic edge sampling
+    (Tsourakakis et al., KDD'09: sparsify with keep-probability p,
+    count exactly on the sparse graph, scale by 1/p³ — unbiased, since
+    a triangle survives iff all three edges do) — the scale path the
+    r10 sf2.5 campaign proved necessary: EXACT triangle counting on
+    the 25× co-purchase graph is inherent Σd_out² work (2.5B wedges;
+    the Spark degree-oriented plan finished in 520 s, the naive
+    id-ordered SQL oracle had to be killed after 9+ CPU-hours), and
+    p = 1/4 cuts the wedge load by p² = 16× Spark-side and makes even
+    the naive oracle tractable (1/64 of the triple-join work).
+
+    Sampling is HASH-based (md5_long of the edge key), not RNG-based:
+    the sampled subgraph is a pure function of the data, identical
+    across engines, partitionings, and reruns — the same determinism
+    discipline as every sampler in this registry.  Outputs are exact
+    integers about the sampled graph plus the scaled estimate; the
+    differential gate certifies the COMPUTATION (sparsify + exact
+    count + scale), while the estimator's variance is the documented
+    statistical property (Var ≈ T·(1/p³−1) for edge-disjoint
+    triangles; measured at sf2.5: est 47,127,232 vs 47,112,200 true —
+    +0.03%).  Local caveat, measured: at sf2.5 the pipeline is
+    edge-BUILD bound (the 30M-edge distinct co-purchase list costs
+    more than the sparsified count), so wall time ≈ the exact head's;
+    the p² wedge reduction pays on denser graphs and the p³ oracle
+    reduction is what makes certification tractable at stress scales.
+    """
+    from processo_etl_spark.ml.dedup import md5_long
+    from processo_etl_spark.operators import graph
+
+    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    # The distinct edge list is the dominant cost (the
+    # pipeline is edge-BUILD bound) and FOUR relational references hang
+    # off it (totals + sampled count + the wedge join's two sides), so
+    # it is persisted for the duration of this query only: the bounded
+    # scalars are folded eagerly (the documented literal-inject class —
+    # same as the two-pass median), the cache is released before
+    # returning, and the result is re-emitted as a one-row literal.
+    # This keeps one edge build without leaking a ~|E|-row cache into
+    # the rest of a multi-query session.
+    edges = graph.cooccurrence_edges(li, "l_orderkey", "l_partkey").persist()
+    try:
+        key = md5_long(
+            F.concat(
+                F.lit("tri:"),
+                F.col("a").cast("string"),
+                F.lit(":"),
+                F.col("b").cast("string"),
+            )
+        )
+        sampled = edges.filter(key % _TRI_DEN == 0)
+        counts = edges.agg(
+            F.count(F.lit(1)).alias("t"),
+            F.sum((key % _TRI_DEN == 0).cast("long")).alias("s"),
+        ).first()
+        tri = (
+            graph.triangle_stats(sampled)
+            .agg(
+                F.coalesce(F.expr("sum(triangles) div 3"), F.lit(0)).alias(
+                    "tri"
+                )
+            )
+            .first()["tri"]
+        )
+    finally:
+        edges.unpersist()
+    return spark.createDataFrame(
+        [(counts["t"], counts["s"] or 0, tri, tri * _TRI_SCALE)],
+        "n_edges_total bigint, n_edges_sampled bigint, "
+        "tri_sampled bigint, est_triangles bigint",
     )
 
 
@@ -908,4 +1011,94 @@ def eval_agreement_kappa(spark, sf_dir):
         (n_guarded * n_guarded - F.col("pe_num"))
         .cast("bigint")
         .alias("kappa_den"),
+    )
+
+
+# Benford first-digit expectation, micro-probabilities: round(1e6 *
+# log10(1 + 1/d)).  Shared literals in both engines (no runtime float);
+# they sum to EXACTLY 1_000_000, so Σ delta_micros = 0 whenever all
+# nine digits occur — a free certificate tested below.
+_BENFORD_MICROS = {
+    1: 301030, 2: 176091, 3: 124939, 4: 96910, 5: 79181,
+    6: 66947, 7: 57992, 8: 51153, 9: 45757,
+}
+
+_BENFORD_VALUES = ", ".join(
+    f"({d}, {m})" for d, m in _BENFORD_MICROS.items()
+)
+
+
+BENFORD_ORACLE = f"""
+    WITH c AS (
+      SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS centi
+      FROM lineitem),
+    d AS (
+      SELECT CAST(substr(CAST(centi AS VARCHAR), 1, 1) AS BIGINT) AS digit
+      FROM c WHERE centi >= 1),
+    g AS (SELECT digit, CAST(count(*) AS BIGINT) AS n_obs
+          FROM d GROUP BY digit),
+    t AS (SELECT CAST(sum(n_obs) AS BIGINT) AS n_total FROM g),
+    e(digit, exp_micros) AS (VALUES {_BENFORD_VALUES})
+    SELECT g.digit, g.n_obs, t.n_total,
+           CAST(e.exp_micros AS BIGINT) AS exp_micros,
+           CAST(1000000 * g.n_obs - e.exp_micros * t.n_total AS BIGINT)
+             AS delta_micros
+    FROM g, t
+    JOIN e ON e.digit = g.digit
+"""
+
+
+@register("benford_digit_audit", BENFORD_ORACLE)
+def benford_digit_audit(spark, sf_dir):
+    """Benford first-significant-digit audit of l_extendedprice — the
+    classic fabricated-/truncated-data screen: observed leading-digit
+    counts against Benford micro-probabilities, with the residual as an
+    exact integer (delta_micros = 10⁶·n_obs − exp_micros·n_total; the
+    analyst divides by 10⁶·n_total client-side).
+
+    The leading digit comes from the STRING form of the exact centi
+    integer (round(price·100) — scaling by 100 never changes the
+    leading digit), because the arithmetic route
+    ``x div 10^floor(log10 x)`` runs through float log10 and can
+    misclassify at power-of-ten boundaries.  Benford is defined for
+    POSITIVE magnitudes only, so rows with centi < 1 are excluded on
+    BOTH engines (a zero centi would emit a Spark
+    digit-0/NULL-expectation row the oracle's inner join drops, and a
+    negative one would crash DuckDB's CAST('-…' prefix); the filter
+    makes digit ∈ 1..9 by construction).  One combinable 9-key
+    groupBy + a broadcast one-row total attach; expectations are
+    shared integer literals.  (TPC-H prices are bounded uniform-ish,
+    NOT Benford — the audit correctly reports large residuals; the
+    differential gate grades the computation, not the hypothesis.)
+    """
+    li = t(spark, sf_dir, "lineitem").select("l_extendedprice")
+    centi = F.round(F.col("l_extendedprice") * 100, 0).cast("long")
+    g = (
+        li.select(centi.alias("centi"))
+        .filter(F.col("centi") >= 1)
+        .select(
+            F.substring(F.col("centi").cast("string"), 1, 1)
+            .cast("long")
+            .alias("digit")
+        )
+        .groupBy("digit")
+        .agg(F.count(F.lit(1)).alias("n_obs"))
+    )
+    total = g.agg(F.sum("n_obs").alias("n_total"))
+    exp = F.create_map(
+        *[F.lit(x) for d, m in _BENFORD_MICROS.items() for x in (d, m)]
+    )[F.col("digit")].cast("long")
+    return (
+        g.join(F.broadcast(total))
+        .withColumn("exp_micros", exp)
+        .select(
+            "digit",
+            "n_obs",
+            "n_total",
+            "exp_micros",
+            (
+                F.lit(1_000_000) * F.col("n_obs")
+                - F.col("exp_micros") * F.col("n_total")
+            ).alias("delta_micros"),
+        )
     )

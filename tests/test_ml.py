@@ -1974,6 +1974,41 @@ def test_join_bloom_pruned_equals_plain_join(spark):
     assert 20 <= kept < 100  # 20 true keys + few FPs, ≪ 500
 
 
+def test_bloom_consumers_keep_callers_words_column(spark):
+    """The attached filter column is reserved (``__bloom_words``): a
+    caller relation with its own ``words`` column must neither make the
+    probe ambiguous nor lose that column to the filter's drop."""
+    from processo_etl_spark.ml import bloom
+
+    left = spark.createDataFrame(
+        [(i, f"w{i}") for i in range(100)], ["lk", "words"]
+    )
+    right = spark.createDataFrame([(i,) for i in range(0, 100, 10)], ["rk"])
+    pruned = bloom.join_bloom_pruned(left, right, "lk", "rk", n_bits=1 << 12, k=4)
+    plain = left.join(right, left["lk"] == right["rk"])
+    assert pruned.columns == plain.columns == ["lk", "words", "rk"]
+    assert sorted(map(tuple, pruned.collect())) == sorted(
+        map(tuple, plain.collect())
+    )
+
+    corpus = spark.createDataFrame(
+        [("a", "shared five gram text here today ok"), ("b", "nothing alike")],
+        ["words", "text"],
+    )
+    eval_set = spark.createDataFrame(
+        [("shared five gram text here today ok",)], ["text"]
+    )
+    out = {
+        r["words"]: r
+        for r in bloom.bloom_contamination(
+            corpus, eval_set, "text", "words", n=5, n_bits=1 << 12, k=4
+        ).collect()
+    }
+    assert set(out) == {"a", "b"}
+    assert out["a"]["n_exact_hits"] > 0 and out["a"]["contaminated"]
+    assert out["b"]["n_exact_hits"] == 0
+
+
 def test_bigram_coherence_hand_computed(spark):
     rows = [
         (1, "a b c"),        # bigrams: "a b", "b c"

@@ -151,6 +151,36 @@ def test_registry_integrity_and_priority_window():
                 )
     # Oracle keys are always a subset of query keys.
     assert set(oracles) <= set(queries)
+    # One way to register a query: the registry loads every plan module
+    # (none sits implemented but unloaded), and ``register`` is only ever
+    # applied as a function decorator — never called from a bulk loop.
+    import ast
+    from pathlib import Path
+
+    from processo_etl_spark.plans import _PLAN_MODULES
+
+    pkg = Path(plans.__file__).parent
+    unloaded = {p.stem for p in pkg.glob("*.py")} - {"__init__", "common"}
+    unloaded -= set(_PLAN_MODULES)
+    assert not unloaded, f"plan modules missing from _PLAN_MODULES: {unloaded}"
+    for p in sorted(pkg.glob("*.py")):
+        if p.stem == "__init__":
+            continue
+        tree = ast.parse(p.read_text())
+        decorators = {
+            id(d)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.FunctionDef)
+            for d in node.decorator_list
+        }
+        bare = [
+            n.lineno
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and getattr(n.func, "id", None) == "register"
+            and id(n) not in decorators
+        ]
+        assert not bare, f"{p.name}: register() called outside @ at {bare}"
 
 
 def test_rows_only_driver_grade_retires_from_rotation(tmp_path):

@@ -5,6 +5,11 @@ ml/similarity.sign_pack_words + hamming_topk."""
 import pytest
 from pyspark.sql import functions as F
 
+from processo_etl_spark import catalog
+from processo_etl_spark.plans import all_queries
+
+SF = "/root/testdata/sf0.001"
+
 
 def test_key_violations_holds_and_counts(spark):
     from processo_etl_spark.quality import profile
@@ -378,3 +383,57 @@ def test_eval_agreement_kappa_hand_values(spark, tmp_path):
     r = eval_agreement_kappa(spark, str(tmp_path)).first()
     assert (r["n_docs"], r["n_agree"], r["pe_num"]) == (6, 3, 12)
     assert (r["kappa_num"], r["kappa_den"]) == (6, 24)
+
+
+def test_benford_hand_computed(spark, run_on_table):
+    """String-derived leading digit survives the power-of-ten
+    boundaries float log10 misclassifies (1000.00 -> 1, 999.99 -> 9,
+    0.01 -> 1), absent digits yield no row, and with all nine digits
+    present the exact residuals sum to zero (the literals sum to 1e6)."""
+    rows = [(1000.00,), (999.99,), (0.01,), (914.44,), (55.00,)]
+    df = spark.createDataFrame(rows, "l_extendedprice double")
+    out = {
+        r["digit"]: r for r in run_on_table(df, "benford_digit_audit")
+    }
+    assert set(out) == {1, 5, 9}
+    assert out[1]["n_obs"] == 2 and out[9]["n_obs"] == 2
+    assert out[5]["n_obs"] == 1 and out[5]["n_total"] == 5
+    assert out[1]["exp_micros"] == 301030
+    assert out[1]["delta_micros"] == 1_000_000 * 2 - 301030 * 5
+    # certificate on real data: all nine digits occur at sf0.001, so
+    # the exact residuals cancel and the total matches the fact count
+    full = all_queries()["benford_digit_audit"](spark, SF).collect()
+    assert len(full) == 9
+    assert sum(r["delta_micros"] for r in full) == 0
+    assert full[0]["n_total"] == catalog.load(spark, SF, "lineitem").count()
+
+
+def test_triangle_estimate_sampled_hand_computed(spark, run_on_table):
+    """K8 clique fixture (one order, parts 1..8): the deterministic
+    hash sample is replayed in pure Python (hashlib.md5, same
+    'tri:a:b' key), the sampled-subgraph triangle count is enumerated
+    by brute force, and the estimate is exactly 64x that count."""
+    import hashlib
+    import itertools
+
+    def md5_long(s):
+        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+    parts = list(range(1, 9))
+    rows = [(100, p) for p in parts]
+    df = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
+    out = run_on_table(df, "graph_triangle_estimate_sampled")[0]
+
+    edges = [(a, b) for a, b in itertools.combinations(parts, 2)]
+    sampled = {
+        (a, b) for a, b in edges if md5_long(f"tri:{a}:{b}") % 4 == 0
+    }
+    tri = sum(
+        1
+        for x, y, z in itertools.combinations(parts, 3)
+        if {(x, y), (x, z), (y, z)} <= sampled
+    )
+    assert out["n_edges_total"] == len(edges) == 28
+    assert out["n_edges_sampled"] == len(sampled)
+    assert out["tri_sampled"] == tri
+    assert out["est_triangles"] == 64 * tri

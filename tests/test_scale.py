@@ -153,8 +153,8 @@ def test_plan_audit_no_cartesian_no_python_rowudf(spark):
         "q11_important_parts",
         "q22_global_sales",
         # one-row n_total attach under the 9-row digit table — the
-        # DSIR/q11 scalar-attach shape (staged_r11, audited since its
-        # r11 registration).
+        # DSIR/q11 scalar-attach shape (audited since its r11
+        # registration).
         "benford_digit_audit",
         # two ONE-ROW scalar attaches (sampled edge count + sampled
         # triangle count) under the one-row totals — linear scalar

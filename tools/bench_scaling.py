@@ -104,15 +104,19 @@ def main() -> int:
             text=True,
             env=dict(os.environ, SPARK_GRAFT_CPUS=str(cpus)),
         )
-        line = [
-            ln for ln in p.stdout.splitlines() if ln.startswith("{")
-        ][-1]
-        runs[cpus] = json.loads(line)
+        lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
+        if p.returncode != 0 or not lines:
+            sys.stderr.write(p.stderr)
+            raise SystemExit(
+                f"bench_scaling: inner run at {cpus} cpus failed "
+                f"(exit {p.returncode}, {len(lines)} JSON lines)"
+            )
+        runs[cpus] = json.loads(lines[-1])
     hi, lo = max(cpu_list), min(cpu_list)
     ratios = {
         n: round(runs[lo]["steady"][n] / runs[hi]["steady"][n], 2)
         for n in names
-        if runs[hi]["steady"].get(n)
+        if runs[hi]["steady"].get(n) and runs[lo]["steady"].get(n)
     }
     art = {
         "metric": "scaling_spot_wall",

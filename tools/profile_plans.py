@@ -1,12 +1,11 @@
-"""r15 optimization-round profiler: capture .explain("formatted") for a
-set of REGISTRY queries (not just bench headliners) and time each one
-with the noop sink (sf0.001 warm-up, cold pass, steady pass — the bench
-methodology).
+"""Plan profiler: capture .explain("formatted") for a set of registry
+queries and time each one with the noop sink using the bench methodology
+(sf0.001 warm-up, cold pass, steady pass).
 
-Usage: python tools/profile_r15.py <before|after> [sf_dir] [q1,q2,...]
+Usage: python tools/profile_plans.py <before|after> [sf_dir] [q1,q2,...]
 
-Writes plans/r15/<query>_<tag>.txt and prints a JSON timing line.
-Defaults to the queries this round touches.
+Queries default to the bench headline (``bench.HEADLINE``).  Writes
+plans/profile/<query>_<tag>.txt and prints a JSON timing line.
 """
 
 from __future__ import annotations
@@ -18,17 +17,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import BENCH_OVERRIDES, _force  # noqa: E402
+from bench import BENCH_OVERRIDES, HEADLINE, _force  # noqa: E402
 from processo_etl_spark import plans, session  # noqa: E402
-
-DEFAULT = [
-    "graph_pagerank_distributed",
-    "graph_kcore_order_parts",
-    "graph_communities_lpa",
-    "decontaminate_bloom",
-    "join_bloom_pruned_orders",
-    "dedup_duplicate_spans",
-]
 
 
 def explain_formatted(df) -> str:
@@ -42,14 +32,14 @@ def explain_formatted(df) -> str:
 def main() -> int:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    names = sys.argv[3].split(",") if len(sys.argv) > 3 else DEFAULT
+    names = sys.argv[3].split(",") if len(sys.argv) > 3 else list(HEADLINE)
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r15",
+        "profile",
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = session.get_spark(app_name=f"profile_r15_{tag}")
+    spark = session.get_spark(app_name=f"profile_plans_{tag}")
     queries = plans.all_queries()
 
     warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
