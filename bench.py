@@ -94,15 +94,17 @@ def _pagerank_plain(spark, sf_dir):
 BENCH_OVERRIDES = {"graph_pagerank_distributed": _pagerank_plain}
 
 
-def _env_fingerprint() -> dict:
+def _env_fingerprint(spark) -> dict:
     """Machine-state snapshot (VERDICT r6 #2): makes a uniform
     round-over-round drift attributable to host load / memory pressure /
-    competing JVMs in one read, instead of inferred from variance bands."""
-    import os
-
+    competing JVMs in one read, instead of inferred from variance bands.
+    The parallelism is what the session runs with, not OS affinity."""
+    sc = spark.sparkContext
     fp: dict = {
         "loadavg_1m_5m_15m": [round(x, 2) for x in os.getloadavg()],
-        "cpus_granted": len(os.sched_getaffinity(0)),
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "spark_graft_cpus": os.environ.get("SPARK_GRAFT_CPUS"),
         "cpu_count": os.cpu_count(),
     }
     try:
@@ -311,7 +313,7 @@ def main() -> int:
     except ValueError:
         sf_val = sf
     spark = session.get_spark(app_name="bench")
-    env = _env_fingerprint()
+    env = _env_fingerprint(spark)
     try:
         with open(
             os.path.join(

@@ -54,7 +54,8 @@ def pagerank_from_edges(
     Every float op mirrors the SQL oracle exactly:
     ``contrib = (rank * w) / out`` left-associated, per-node sums are
     value-sorted left folds, and the update is
-    ``(1−d)/n + d·(S + dang/n)`` with that literal bracketing.
+    ``(1−d)/n + d·(S + dang/n)`` with that literal bracketing.  A node
+    whose out-weights sum to 0 is dangling, like one with no out-edge.
     """
     n = float(len(nodes))
     out: dict[str, float] = {}
@@ -65,8 +66,9 @@ def pagerank_from_edges(
     for _ in range(iterations):
         contribs: dict[str, list[float]] = {v: [] for v in nodes}
         for s, d_, w in edges:
-            contribs[d_].append((rank[s] * float(w)) / out[s])
-        dang_terms = sorted(rank[v] for v in nodes if v not in out)
+            if out[s] != 0:
+                contribs[d_].append((rank[s] * float(w)) / out[s])
+        dang_terms = sorted(rank[v] for v in nodes if out.get(v, 0) == 0)
         dang = 0.0
         for t in dang_terms:
             dang = dang + t
@@ -131,7 +133,7 @@ def pagerank_distributed(
 
     ``edges`` is (src, dst, w), with NON-NULL weights as a precondition
     (ADVICE r14): the fused node aggregate classifies a node as
-    dangling iff its summed out-weight is NULL, so a node whose every
+    dangling iff its summed out-weight is NULL or 0, so a node whose every
     out-edge carries a NULL ``w`` would be classed dangling and its
     edges dropped from the routing join — coalesce weights to a default
     upstream if your graph can contain them.  Per iteration:
@@ -197,7 +199,7 @@ def pagerank_distributed(
     # groupBy PLUS a left join to flag dangling nodes — three exchanges
     # where one combinable aggregate suffices): every edge emits its src
     # with weight and its dst with NULL; sum(w) per node is the
-    # out-weight, NULL out-weight ⟺ dangling.
+    # out-weight, NULL (or 0, nulled here) out-weight ⟺ dangling.
     # The raw edge relation is consumed TWICE (the fused node aggregate
     # below and the routed join) — un-persisted, its whole lineage (for
     # the bench graph: an orders scan plus a lineitem pre-aggregation)
@@ -215,7 +217,7 @@ def pagerank_distributed(
     )
     node_info = (
         ends.groupBy("node")
-        .agg(F.sum("ow").alias("out_w"))
+        .agg(F.nullif(F.sum("ow"), F.lit(0)).alias("out_w"))
         .repartition("node")
         .persist()
     )

@@ -123,10 +123,13 @@ _PINNED = (
     "rename_cast_fact",
 )
 
-# Verdict-named never-graded family heads, graded before registry order,
-# plus this round's new capabilities (real PNG decode, distributed
-# PageRank) so they earn CORRECTNESS rows immediately.
+# Heads graded ahead of registry order (after _PINNED): each was the
+# newest, least-proven code of its family when added, so it earns a
+# graded row before older, already-certified queries.  Queries outside
+# this list fill the window by registry order (see _WINDOW above).
 _ROTATION_HEADS = (
+    # Family heads never graded before, plus the first real PNG
+    # decode and the distributed PageRank.
     "dedup_simhash_banded",
     "similarity_topk_ivfpq",
     "cms_heavy_hitters",
@@ -136,11 +139,8 @@ _ROTATION_HEADS = (
     "graph_pagerank_distributed",
     "decontaminate_semantic",
     "bitext_mine_margin",
-    # r6 heads (VERDICT r5 #1/#5): the flattened multimodal_features must
-    # earn its green row the same round as the array-output fix, and the
-    # round-5 textlm family (property-tested, never driver-graded) is the
-    # newest least-proven code — grade it before older twice-checked
-    # variants deeper in the registry.
+    # The flattened multimodal_features (its array-output fix needs a
+    # graded row) and the textlm family, property-tested only.
     "multimodal_features",
     "ngram_continuation_counts",
     "collocations_lift_topk",
@@ -149,24 +149,17 @@ _ROTATION_HEADS = (
     "ngram_diversity_by_source",
     "heaps_vocab_growth",
     "tokens_gini_by_source",
-    # r7 heads (VERDICT r6 #1): the four late-r6 capability heads,
-    # promoted at round-7 start exactly as committed above — they are the
-    # newest least-proven code (local oracle + property tests only).
+    # Capability heads with local oracle and property tests only.
     "retrieval_hybrid_rrf",
     "knn_label_vote",
     "retrieval_eval_recall",
     "rollup_incremental_merge",
-    # r7 head (VERDICT r6 #5): real-file media ingestion graded under the
-    # driver — binaryFile scan of a deterministic PNG corpus written at
-    # plan time, decoded by the vendored codec, against the closed-form
-    # pixel oracle.  Proves the scan + IHDR parse + keying, not just the
+    # Real-file media ingestion: a binaryFile scan of a deterministic PNG
+    # corpus decoded by the vendored codec, against a closed-form pixel
+    # oracle -- proves the scan, IHDR parse and keying, not just the
     # synthesized-media twins.
     "multimodal_binary_ingest",
-    # r8 heads (VERDICT r7 #3 — the r7-start promotion commitment,
-    # honored verbatim): the 19 late-r7 registry-TAIL capability heads
-    # (web 10, media 5, privacy 4) are the newest least-proven code, so
-    # they grade first this round, plus the r7-displaced
-    # dedup_lexical_semantic_agreement re-entering as committed.
+    # Registry-tail capability heads (web, media, privacy).
     "warc_ingest",
     "url_canonicalize_dedup",
     "domain_caps_topk",
@@ -187,29 +180,19 @@ _ROTATION_HEADS = (
     "k_suppress_small_groups",
     "dp_noisy_counts",
     "dedup_lexical_semantic_agreement",
-    # r8 heads (VERDICT r7 #4): the two float-sensitive flagships with
-    # zero driver evidence — ewma_user_value (bench headliner,
-    # pre-hardened this round to a fixed-point integer recurrence) and
-    # asof_purchase_last_view (the as-of join flagship) — must earn
-    # their rows this round rather than waiting for registry order.
+    # Float-sensitive flagships: the fixed-point EWMA recurrence and the
+    # as-of join.
     "ewma_user_value",
     "asof_purchase_last_view",
-    # ---- r9 window (VERDICT r8 #1–#4, #7): all 35 rotation slots are
-    # named EXPLICITLY this round — r8 proved "fills naturally by
-    # registry order" does not reach plans/tpch.py, so nothing is left
-    # to registry order.  15 pinned + 35 named = the exact 50-slot
-    # window, pre-verified at sf0.01 before commit.
-    #
-    # 1+3: the twice-red drift head, re-built with a 100% float-free
-    # hashed output (exact-integer chi2_micros), plus the three
-    # diagnostic probes that localize WHICH column the driver
-    # environment diverges on (VERDICT r8 #1/#2).
+    # The float-free drift head, plus probes that localize which column
+    # class (ints, rounded doubles, booleans) the grading environment
+    # diverges on; they retire after one grade (_ONE_SHOT_PROBES).
     "drift_chi2_sources",
     "drift_probe_ints",
     "drift_probe_round",
     "drift_probe_verdict",
-    # 12: the TPC-H tail, drained explicitly (VERDICT r8 #3) — the most
-    # user-recognizable query surface, zero driver evidence through r8.
+    # The TPC-H tail, named because registry order does not reach
+    # plans/tpch.py inside the window.
     "q2_min_acctbal_supplier",
     "q4_order_priority_exists",
     "q7_volume_shipping",
@@ -222,9 +205,7 @@ _ROTATION_HEADS = (
     "q20_part_promotion",
     "q21_waiting_supplier",
     "q22_global_sales",
-    # 14: the r9 promotion commitment honored verbatim (VERDICT r8 #4)
-    # — the mid-r8 registry-TAIL heads (plans/profile.py +
-    # plans/retrieval.py), local-green + sf0.5-swept last round.
+    # Profile and retrieval tail heads.
     "profile_keys_fds",
     "profile_categorical_gini",
     "compaction_plan_sources",
@@ -239,67 +220,21 @@ _ROTATION_HEADS = (
     "similarity_topk_binary",
     "retrieval_matryoshka_recall",
     "retrieval_eval_mrr",
-    # 5: start retiring the events/temporal local-only family (VERDICT
-    # r8 #7) — bench headliners / sketch flagships first.
+    # Events/temporal heads with only local evidence: bench headliners
+    # and sketch flagships first.
     "funnel_view_click_purchase",
     "cohort_weekly_retention",
     "hll_daily_merge_distinct",
     "snapshot_diff_orders",
     "sequence_double_click_purchase",
-    # r10 (VERDICT r9 #5): the O(L) chunked-EWMA scale path earns its
-    # driver row via a kmeans-style partial certificate — exact integer
-    # row/key/chunk accounting + booleans pinning |chunked − naive| and
-    # |chunked − fixed-point| inside the property-tested bounds.
+    # The O(L) chunked-EWMA scale path, graded by a partial certificate:
+    # exact integer row/key/chunk accounting plus booleans pinning
+    # |chunked - naive| and |chunked - fixed-point| inside the
+    # property-tested bounds.
     "ewma_user_value_chunked",
-    # r10 (scale extension): rank-normalized Z-order layout gain — the
-    # OPTIMIZE ZORDER planning measurement, all-integer zone-map spans
-    # under linear vs Morton order.  Takes the window's one non-drain
-    # slot (the re-certify fill), so the 34-query drain is untouched.
+    # Rank-normalized Z-order layout gain: all-integer zone-map spans
+    # under linear vs Morton order.
     "layout_zorder_gain",
-    # ---- r10 handoff: after the r9 CORRECTNESS file lands, the
-    # never-graded pool is ~32 queries (the remaining 21 oracle-backed
-    # events/temporal heads + 9 rows-only stream_* jobs + the 2 r9-new
-    # pack_sequences_* heads) — it fits the 35 rotation slots whole, so
-    # r10 needs NO new head names: the self-fill completes the drain.
-    # If drift_chi2_sources is red AGAIN in r9, read the three
-    # drift_probe_* rows first — they localize the diverging column
-    # class (ints/round-double/boolean); the probes themselves retire
-    # after one grade (_ONE_SHOT_PROBES) and must NOT be re-added.
-    # ---- r11 status (supersedes the r10 handoff; VERDICT r10 #1/#2):
-    # the r10 drain completed — all 50 r10 rows recorded, the ten
-    # stream_* jobs drew their designed rows-only grade (err ==
-    # "no_oracle", now recognized as certifying by _grade_rounds; the
-    # r10-era claim that the pool would be empty was wrong only because
-    # a synthetic simulation file used err: None for rows-only rows).
-    # The TEN r10-banked heads (sample_per_key_deterministic,
-    # split_temporal_embargo, feature_binning_equidepth,
-    # anomaly_rolling_zscore, markov_event_transitions,
-    # changepoint_cusum_alerts, events_debounce_lag,
-    # weighted_median_price_by_flag, benford_digit_audit,
-    # graph_triangle_estimate_sampled) are ACTIVATED this round — they
-    # fill tier-1 ungraded-oracle-backed slots; the remaining ~25
-    # rotation slots fall to tier-3 oldest-evidence-first re-certify
-    # (r1-era greens first: intersect_custkeys, except_custkeys,
-    # iqr_outlier_count, rollup_revenue, cube_counts, …).  Add NEW
-    # queries normally; ungraded oracle-backed names always pre-empt
-    # re-certification slots.  If any row comes back red, it stays in
-    # the pool and re-windows automatically ahead of re-certifies —
-    # diagnose with the SCALE.md determinism rules (decimal / HUGEINT /
-    # float-fold) before touching the plan.
-    # ---- r12 status (supersedes the r11 handoff; VERDICT r11 #1-#6):
-    # the r11 window came back 50/50 green.  r12 registered the NINE
-    # stream_batch_equiv_* certificates (plans/stream_equiv — the
-    # remaining eight stream_* jobs per VERDICT r11 #4 plus the
-    # binaryFile-media ingest surface); they fill tier-1 ahead of 26
-    # r4-era re-certifies, the whole window pre-swept 0-fail at sf0.01
-    # (SCALE.md r12).  After the r12 CORRECTNESS file lands the pool is
-    # drained again, so the r13 window = 15 pinned + 35 re-certifies
-    # (oldest evidence then: the remaining r4 greens, then r5) unless
-    # r13 registers new heads.  The window digest in COVERAGE.md /
-    # SKILL.md is stamped with its CORRECTNESS round set and gen_counts
-    # --check regenerates against that stamp — run `python
-    # tools/gen_counts.py` (no flag) at round start to re-stamp with
-    # the driver's new file; --check alone never goes stale.
 )
 
 # The canary probes (shared definition — processo_etl_spark/grading.py).

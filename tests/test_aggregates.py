@@ -1,13 +1,26 @@
 """Aggregate heads (plans/aggregates): equi-depth binning and the
 exact weighted median, against hand-computed and pure-Python replays
-(their DuckDB oracle checks live in tests/test_staged_r11.py)."""
+and their DuckDB oracles at sf0.001."""
 
 from __future__ import annotations
+
+import pytest
 
 from processo_etl_spark import catalog
 from processo_etl_spark.plans import all_queries
 
 SF = "/root/testdata/sf0.001"
+
+
+@pytest.mark.parametrize(
+    "name",
+    (
+        "feature_binning_equidepth",
+        "weighted_median_price_by_flag",
+    ),
+)
+def test_head_matches_oracle(assert_matches_oracle, name):
+    assert_matches_oracle(name)
 
 
 def test_equidepth_bins_semantics(spark):

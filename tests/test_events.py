@@ -1,15 +1,31 @@
 """Event-analytics heads (plans/events): hand-computed semantics and
-pure-Python replays of the sequential heads over the whole fixture
-(their DuckDB oracle checks live in tests/test_staged_r11.py)."""
+pure-Python replays of the sequential heads over the whole fixture,
+and their DuckDB oracle checks at sf0.001."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from processo_etl_spark import catalog
 from processo_etl_spark.plans import all_queries
 
 SF = "/root/testdata/sf0.001"
+
+
+@pytest.mark.parametrize(
+    "name",
+    (
+        "anomaly_rolling_zscore",
+        "changepoint_cusum_alerts",
+        "events_debounce_lag",
+        "markov_event_transitions",
+        "sample_per_key_deterministic",
+        "split_temporal_embargo",
+    ),
+)
+def test_head_matches_oracle(assert_matches_oracle, name):
+    assert_matches_oracle(name)
 
 
 def test_sample_per_key_semantics(spark):

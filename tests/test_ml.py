@@ -1842,6 +1842,42 @@ def test_pagerank_broadcast_and_shuffle_modes_bitequal(spark):
     assert abs(sum(bcast.values()) - 1.0) < 1e-9
 
 
+def test_pagerank_zero_out_weight_is_dangling(spark):
+    """A node whose out-weights sum to 0 routes no mass along its edges:
+    it is dangling, in the Spark operator (broadcast and shuffle layout)
+    and in the driver twin alike — bit-equal ranks, no division by 0."""
+    from processo_etl_spark.operators import graph
+
+    es = [
+        ("a", "b", 1), ("b", "c", 2), ("c", "a", 1), ("c", "d", 0),
+        ("d", "a", 0), ("d", "b", 0),
+    ]
+    nodes = sorted({s for s, _, _ in es} | {d for _, d, _ in es})
+    ref = graph.pagerank_from_edges(nodes, es, 0.85, 5)
+    # d's whole out-mass is redistributed uniformly, as for a sink
+    sink = graph.pagerank_from_edges(
+        nodes, [e for e in es if e[0] != "d"], 0.85, 5
+    )
+    assert ref == sink
+    edf = spark.createDataFrame(es, ["src", "dst", "w"])
+
+    def ranks():
+        return {
+            r["node"]: r["pagerank"]
+            for r in graph.pagerank_distributed(edf, 0.85, 5).collect()
+        }
+
+    bcast = ranks()
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        shuf = ranks()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert bcast == shuf == ref  # bit-for-bit, not approx
+    assert abs(sum(ref.values()) - 1.0) < 1e-9
+
+
 def test_bloom_contamination_bounds_exact(spark):
     from processo_etl_spark.ml import bloom
 

@@ -1,6 +1,7 @@
 """Unit tests for the r8 profiling/maintenance/binary-ANN tranche:
 quality/profile, operators/maintenance, operators/graph.kcore_peel,
-ml/similarity.sign_pack_words + hamming_topk."""
+ml/similarity.sign_pack_words + hamming_topk, and the DuckDB oracle
+checks of the profile heads."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,6 +10,17 @@ from processo_etl_spark import catalog
 from processo_etl_spark.plans import all_queries
 
 SF = "/root/testdata/sf0.001"
+
+
+@pytest.mark.parametrize(
+    "name",
+    (
+        "benford_digit_audit",
+        "graph_triangle_estimate_sampled",
+    ),
+)
+def test_head_matches_oracle(assert_matches_oracle, name):
+    assert_matches_oracle(name)
 
 
 def test_key_violations_holds_and_counts(spark):

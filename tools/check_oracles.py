@@ -167,7 +167,7 @@ def main() -> int:
         # k-means/IVF plans run driver-side sampling jobs) at build time,
         # so skip the streaming family here — their batch twins carry the
         # schema check, and the main differential path still runs them.
-        spark = session.get_spark(cpus=4)
+        spark = session.get_spark()
         all_oracles = plans.all_oracles()
         bad = []
         for name, fn in plans.all_queries().items():
@@ -204,7 +204,7 @@ def main() -> int:
                 bad.append(name)
         print(f"\n{len(bad)} schema failures: {bad}")
         return 1 if bad else 0
-    spark = session.get_spark(cpus=16)
+    spark = session.get_spark()
     con = duckdb.connect()
     for t in catalog.TABLES:
         con.execute(
