@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from processo_etl_spark.session import broadcast_threshold_bytes
+
 
 def transition_edges(
     events: DataFrame,
@@ -103,20 +105,6 @@ def event_type_pagerank(
     return spark.createDataFrame(
         [(v, ranks[v]) for v in nodes], ["event_type", "pagerank"]
     )
-
-
-def _broadcast_threshold_bytes(df: DataFrame) -> int:
-    """spark.sql.autoBroadcastJoinThreshold as an int (bytes); suffixed
-    forms fall back to the 10 MiB default (be conservative).  ≤ 0 means
-    broadcasting is disabled and every vertex-mirroring dispatch below
-    must pick the shuffle layout."""
-    thresh = df.sparkSession.conf.get(
-        "spark.sql.autoBroadcastJoinThreshold", "10485760"
-    )
-    try:
-        return int(thresh)
-    except ValueError:
-        return 10 * 1024 * 1024
 
 
 def pagerank_distributed(
@@ -243,7 +231,7 @@ def pagerank_distributed(
     # Both paths run the same arithmetic on the same per-node value
     # multisets — the value-sorted fold makes the combine
     # order-insensitive, so the choice never changes a bit of output.
-    thresh_b = _broadcast_threshold_bytes(edges)
+    thresh_b = broadcast_threshold_bytes(edges.sparkSession)
     broadcast_ranks = thresh_b > 0 and n * 64 <= thresh_b
     # Static relations are persisted PRE-PARTITIONED on the key their
     # superstep consumer needs (dst for the local combine in broadcast
@@ -408,36 +396,6 @@ def pagerank_distributed(
     return ranks.select("node", F.col("rank").alias("pagerank"))
 
 
-def pagerank_auto(
-    edges: DataFrame,
-    damping: float = 0.85,
-    iterations: int = 10,
-    driver_max_nodes: int = 1000,
-) -> DataFrame:
-    """Dispatch on graph size (the ``build_dimension_auto`` pattern): an
-    ``approx_count_distinct`` probe of the node domain picks the driver
-    power method for tiny aggregated graphs (event-type journeys — one
-    collect, zero iterative jobs) and the Pregel loop otherwise.  Both
-    paths use value-sorted folds with identical bracketing, so the
-    choice never changes a single bit of output.
-    """
-    probe = edges.agg(
-        (
-            F.approx_count_distinct("src") + F.approx_count_distinct("dst")
-        ).alias("n")
-    ).first()["n"]
-    if probe <= driver_max_nodes:
-        spark = edges.sparkSession
-        rows = edges.collect()
-        es = [(r["src"], r["dst"], r["w"]) for r in rows]
-        ns = sorted({r["src"] for r in rows} | {r["dst"] for r in rows})
-        ranks = pagerank_from_edges(ns, es, damping, iterations)
-        return spark.createDataFrame(
-            [(v, ranks[v]) for v in ns], ["node", "pagerank"]
-        )
-    return pagerank_distributed(edges, damping, iterations)
-
-
 def label_propagation(
     edges: DataFrame,
     iterations: int = 3,
@@ -490,7 +448,7 @@ def label_propagation(
             F.approx_count_distinct(src) + F.approx_count_distinct(dst)
         ).alias("n")
     ).first()["n"]
-    thresh_b = _broadcast_threshold_bytes(edges)
+    thresh_b = broadcast_threshold_bytes(edges.sparkSession)
     broadcast_labels = thresh_b > 0 and probe * 80 <= thresh_b
     nb = (
         edges.select(

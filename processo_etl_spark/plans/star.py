@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from processo_etl_spark.operators import star
 from processo_etl_spark.plans import register
 from processo_etl_spark.plans.common import dec, t
+from processo_etl_spark.session import broadcast_threshold_bytes
 
 
 # --- end-to-end reference-parity pipeline ------------------------------------
@@ -329,10 +330,7 @@ def q3_shipping_priority(spark, sf_dir):
         F.broadcast(c.select("c_custkey")),
         o.o_custkey == F.col("c_custkey"),
     ).select("o_orderkey", "o_orderdate", "o_orderpriority")
-    try:
-        thresh = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    except ValueError:
-        thresh = 10 * 1024 * 1024
+    thresh = broadcast_threshold_bytes(spark)
     raw_bytes = int(
         o_raw._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     )

@@ -20,6 +20,26 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """``$SPARK_DRIVER_MEMORY``, else 60 % of this machine's physical
+    memory in MiB.  In local mode the driver heap holds every executor
+    thread's working set; a heap sized past physical memory gets the
+    process killed by the OS instead of making Spark spill to disk."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{int(phys * 0.6) // (1024 * 1024)}m"
+
+
+def broadcast_threshold_bytes(spark: SparkSession) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes, as the planner
+    reads it.  ``spark.conf.get`` returns the value as it was typed
+    (``"64m"``), which ``int()`` cannot parse.  ≤ 0 means broadcasting
+    is disabled."""
+    return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
+
+
 def get_spark(
     app_name: str = "processo_etl_spark",
     cpus: int | None = None,
@@ -44,7 +64,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Whole-stage-codegen COMPILE cache (r15): the default 100

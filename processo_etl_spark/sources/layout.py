@@ -74,35 +74,6 @@ def skipping_fraction(ranges: list[tuple], lo, hi) -> float:
     return skipped / len(ranges)
 
 
-def zorder_key(c1, c2, bits: int = 16):
-    """Z-order (Morton) key: interleave the low ``bits`` of two
-    non-negative int expressions — pure native bit arithmetic, no UDF.
-
-    Sorting by a single column gives perfect skipping on it and none on
-    anything else; the Z-curve trades a little locality on each
-    dimension for real locality on BOTH, so range predicates on either
-    column prune row groups (the Delta/Iceberg OPTIMIZE ZORDER layout,
-    here as a plain column expression).  Inputs must be ordinal-coded
-    (already-int columns, or rank/bucket them first); values are clamped
-    into [0, 2^bits).
-    """
-    from pyspark.sql import functions as F
-
-    def clamp(c):
-        c = c.cast("long")
-        return F.least(F.greatest(c, F.lit(0)), F.lit((1 << bits) - 1))
-
-    a, b = clamp(c1), clamp(c2)
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        z = (
-            z
-            + ((F.shiftright(a, i) % 2) * F.lit(1 << (2 * i)))
-            + ((F.shiftright(b, i) % 2) * F.lit(1 << (2 * i + 1)))
-        )
-    return z
-
-
 def write_zordered(
     df: DataFrame,
     path: str,
@@ -114,10 +85,17 @@ def write_zordered(
 ) -> None:
     """Write clustered on the Z-order key of (col1, col2): range-exchange
     + local sort on the interleaved key, key column dropped from the
-    stored data.  Same distributed-sort shape as ``write_sorted``."""
-    from pyspark.sql import functions as F
+    stored data.  Same distributed-sort shape as ``write_sorted``.
 
-    keyed = df.withColumn("__z", zorder_key(F.col(col1), F.col(col2), bits))
+    The Z-curve trades a little locality on each column for real
+    locality on BOTH, so range predicates on either column prune row
+    groups (the Delta/Iceberg OPTIMIZE ZORDER layout).  Inputs must be
+    non-negative ints below 2^bits (rank or bucket other columns
+    first): larger values wrap around, which only costs locality.
+    """
+    from processo_etl_spark.operators.layout import zorder_key
+
+    keyed = df.withColumn("__z", zorder_key([col1, col2], bits))
     out = (
         keyed.repartitionByRange(num_files, "__z")
         if num_files

@@ -9,6 +9,7 @@ as batch when nothing is late".
 
 ``availableNow`` drains everything currently in the source and stops —
 the batch-replay trigger used by tests and the rows-only driver check.
+Every ``run_*_availablenow`` runner drains through :func:`drain`.
 """
 
 from __future__ import annotations
@@ -16,11 +17,52 @@ from __future__ import annotations
 import tempfile
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from processo_etl_spark import catalog
 from processo_etl_spark.plans.common import dec
+
+
+def drain(df: DataFrame, output_mode: str) -> DataFrame:
+    """Run the streaming ``df`` once over everything now in its source
+    (``availableNow``) into a memory sink and return the sink's rows.
+
+    The checkpoint directory and the sink's temp view are both gone when
+    this returns: the returned frame's plan holds the sink object
+    itself, so it stays readable without either.
+    """
+    spark = df.sparkSession
+    name = f"stream_{uuid.uuid4().hex}"
+    with tempfile.TemporaryDirectory(prefix="ck_") as ck:
+        q = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ck)
+            .start()
+        )
+        try:
+            q.awaitTermination()
+            return spark.table(name)
+        finally:
+            # an interrupted wait leaves the query running: stop it
+            # before its checkpoint directory is removed
+            q.stop()
+            spark.catalog.dropTempView(name)
+
+
+def final_per_user(df: DataFrame, progress: Column) -> DataFrame:
+    """Update mode re-emits a user once per micro-batch that touched it;
+    the row with the largest ``progress`` (a per-user count that only
+    grows) is the user's final state."""
+    w = Window.partitionBy("user_id").orderBy(F.desc(progress))
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -71,6 +113,51 @@ SESSION_STATE_SCHEMA = (
 )
 
 
+def _merge_sessions(prior, pdfs, gap_seconds: int, watermark_s: float = 0.0):
+    """One sessionizer step for one user, shared by the
+    applyInPandasWithState and transformWithStateInPandas operators.
+
+    ``prior`` is the user's state ``(starts, ends, n_events, closed)`` or
+    None; ``pdfs`` are the new pandas frames.  Each event is a [t, t]
+    interval and intervals within ``gap_seconds`` merge.  With
+    ``watermark_s`` > 0, intervals that end more than ``gap_seconds``
+    before it fold into ``closed``.  Returns the new state tuple.
+    """
+    if prior is None:
+        intervals, n_events, closed = [], 0, 0
+    else:
+        starts, ends, n_events, closed = prior
+        intervals = [[s, e] for s, e in zip(starts, ends)]
+    for pdf in pdfs:
+        n_events += len(pdf)
+        intervals.extend([ts.timestamp()] * 2 for ts in pdf["ts"])
+    merged: list[list[float]] = []
+    for iv in sorted(intervals):
+        if merged and iv[0] - merged[-1][1] <= gap_seconds:
+            merged[-1][1] = max(merged[-1][1], iv[1])
+        else:
+            merged.append(iv)
+    if watermark_s > 0:
+        closed += sum(iv[1] + gap_seconds < watermark_s for iv in merged)
+        merged = [iv for iv in merged if iv[1] + gap_seconds >= watermark_s]
+    return [iv[0] for iv in merged], [iv[1] for iv in merged], n_events, closed
+
+
+def _session_row(user_id, state):
+    """The one-row SESSION_OUTPUT_SCHEMA frame for a user's state."""
+    import pandas as pd
+
+    starts, _, n_events, closed = state
+    return pd.DataFrame(
+        {
+            "user_id": [user_id],
+            "n_sessions": [closed + len(starts)],
+            "n_events": [n_events],
+            "n_open": [len(starts)],
+        }
+    )
+
+
 def sessionize_stateful(
     events: DataFrame,
     gap_seconds: int = 1800,
@@ -99,46 +186,11 @@ def sessionize_stateful(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def fold(key, pdf_iter, state: GroupState):
-        import pandas as pd
-
-        (user_id,) = key
-        if state.exists:
-            starts, ends, n_events, closed = state.get
-            intervals = [[s, e] for s, e in zip(starts, ends)]
-        else:
-            intervals, n_events, closed = [], 0, 0
-        new_points = []
-        for pdf in pdf_iter:
-            n_events += len(pdf)
-            new_points.extend(ts.timestamp() for ts in pdf["ts"])
-        merged: list[list[float]] = []
-        for iv in sorted(intervals + [[p, p] for p in new_points]):
-            if merged and iv[0] - merged[-1][1] <= gap_seconds:
-                merged[-1][1] = max(merged[-1][1], iv[1])
-            else:
-                merged.append(iv)
-        if finalize_by_watermark:
-            wm = state.getCurrentWatermarkMs() / 1000.0
-            if wm > 0:
-                settled = [iv for iv in merged if iv[1] + gap_seconds < wm]
-                closed += len(settled)
-                merged = [iv for iv in merged if iv[1] + gap_seconds >= wm]
-        state.update(
-            (
-                [iv[0] for iv in merged],
-                [iv[1] for iv in merged],
-                n_events,
-                closed,
-            )
-        )
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_sessions": [closed + len(merged)],
-                "n_events": [n_events],
-                "n_open": [len(merged)],
-            }
-        )
+        prior = state.get if state.exists else None
+        wm = state.getCurrentWatermarkMs() / 1000.0 if finalize_by_watermark else 0.0
+        new = _merge_sessions(prior, pdf_iter, gap_seconds, wm)
+        state.update(new)
+        yield _session_row(key[0], new)
 
     return events.groupBy("user_id").applyInPandasWithState(
         fold,
@@ -153,47 +205,16 @@ def run_sessionize_stateful_availablenow(
     spark: SparkSession, sf_dir: str, gap_seconds: int = 1800
 ) -> DataFrame:
     """Drain the events source through the stateful sessionizer; the
-    memory sink holds one final row per user (update mode, single drain)."""
-    name = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    q = (
-        sessionize_stateful(read_events_stream(spark, sf_dir), gap_seconds)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
-    )
-    q.awaitTermination()
-    # update mode can emit a user several times across micro-batches;
-    # the row with the highest n_events per user is the final state.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        spark.table(name)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    result holds one final row per user."""
+    sessions = sessionize_stateful(read_events_stream(spark, sf_dir), gap_seconds)
+    return final_per_user(drain(sessions, "update"), F.col("n_events"))
 
 
 def run_tumbling_count_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the whole source once (availableNow) into a memory sink and
     return the result table — a real streaming execution, used by tests
     and the rows-only driver check."""
-    name = f"stream_counts_{uuid.uuid4().hex[:8]}"
-    q = (
-        tumbling_counts(read_events_stream(spark, sf_dir))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(tumbling_counts(read_events_stream(spark, sf_dir)), "complete")
 
 
 def dedup_within_watermark(
@@ -231,19 +252,8 @@ def run_dedup_availablenow(
     src = read_events_stream(spark, sf_dir)
     if duplicate_input:
         src = src.unionByName(read_events_stream(spark, sf_dir))
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        dedup_within_watermark(src)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        drain(dedup_within_watermark(src), "append")
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -291,19 +301,8 @@ def run_interval_join_availablenow(spark: SparkSession, sf_dir: str) -> DataFram
         F.col("event_type") == "purchase"
     )
     views = read_events_stream(spark, sf_dir).filter(F.col("event_type") == "view")
-    name = f"stream_ijoin_{uuid.uuid4().hex[:8]}"
-    q = (
-        interval_join(purchases, views)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        drain(interval_join(purchases, views), "append")
         .groupBy("purchase_id", "user_id")
         .agg(F.count(F.lit(1)).alias("n_views"))
     )
@@ -334,20 +333,11 @@ def run_enrich_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deterministic, matches the batch twin)."""
     ev = read_events_stream(spark, sf_dir)
     dim = catalog.load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    q = (
-        enrich_with_dim(ev, dim, "user_id", "c_custkey")
-        .select("event_id", "value", "c_mktsegment")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
+    enriched = enrich_with_dim(ev, dim, "user_id", "c_custkey").select(
+        "event_id", "value", "c_mktsegment"
     )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        drain(enriched, "append")
         .groupBy(F.coalesce("c_mktsegment", F.lit("UNKNOWN")).alias("segment"))
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -390,18 +380,7 @@ def curate_documents_stream(docs: DataFrame, min_quality: float = 0.3) -> DataFr
 def run_curate_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the documents source through the streaming curation filter."""
     docs = read_documents_stream(spark, sf_dir)
-    name = f"stream_curate_{uuid.uuid4().hex[:8]}"
-    q = (
-        curate_documents_stream(docs)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(curate_documents_stream(docs), "append")
 
 
 def cms_sketch_stream(events: DataFrame, depth: int = 4, width: int = 256) -> DataFrame:
@@ -429,18 +408,7 @@ def run_cms_sketch_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the events source through the streaming sketch build; the
     result is the full-corpus sketch, byte-identical to the batch build
     (asserted in tests) because CMS cells are order-insensitive sums."""
-    name = f"stream_cms_{uuid.uuid4().hex[:8]}"
-    q = (
-        cms_sketch_stream(read_events_stream(spark, sf_dir))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(cms_sketch_stream(read_events_stream(spark, sf_dir)), "complete")
 
 
 def bloom_filter_stream(
@@ -472,18 +440,7 @@ def run_bloom_filter_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame
     """Drain the events source through the streaming Bloom build; the
     result equals the batch ``bloom_build`` word-for-word (asserted in
     tests) because bit-OR is order-insensitive and idempotent."""
-    name = f"stream_bloom_{uuid.uuid4().hex[:8]}"
-    q = (
-        bloom_filter_stream(read_events_stream(spark, sf_dir))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(bloom_filter_stream(read_events_stream(spark, sf_dir)), "complete")
 
 
 def _has_tws_runtime() -> bool:
@@ -538,40 +495,10 @@ def sessionize_tws(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
             self._state = handle.getValueState("sessions", state_schema)
 
         def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            (user_id,) = key
-            if self._state.exists():
-                starts, ends, n_events, closed = self._state.get()
-                intervals = [[s, e] for s, e in zip(starts, ends)]
-            else:
-                intervals, n_events, closed = [], 0, 0
-            new_points = []
-            for pdf in rows:
-                n_events += len(pdf)
-                new_points.extend(ts.timestamp() for ts in pdf["ts"])
-            merged: list[list[float]] = []
-            for iv in sorted(intervals + [[p, p] for p in new_points]):
-                if merged and iv[0] - merged[-1][1] <= gap_seconds:
-                    merged[-1][1] = max(merged[-1][1], iv[1])
-                else:
-                    merged.append(iv)
-            self._state.update(
-                (
-                    [iv[0] for iv in merged],
-                    [iv[1] for iv in merged],
-                    n_events,
-                    closed,
-                )
-            )
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_sessions": [closed + len(merged)],
-                    "n_events": [n_events],
-                    "n_open": [len(merged)],
-                }
-            )
+            prior = self._state.get() if self._state.exists() else None
+            new = _merge_sessions(prior, rows, gap_seconds)
+            self._state.update(new)
+            yield _session_row(key[0], new)
 
         def close(self) -> None:
             pass
@@ -586,25 +513,22 @@ def sessionize_tws(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
 
 def run_sessionize_tws_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the events source through the transformWithState sessionize
-    (RocksDB state store — required by the TWS operator)."""
+    (RocksDB state store — required by the TWS operator).  The provider
+    is a session-wide setting: the caller's value (or its absence) is
+    restored whether or not the drain succeeds."""
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prior = spark.conf.get(key, None)
     spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
+        key,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    name = f"stream_tws_{uuid.uuid4().hex[:8]}"
-    q = (
-        sessionize_tws(read_events_stream(spark, sf_dir))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
-    )
-    q.awaitTermination()
-    # keep a session-wide default provider for other queries
-    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    return spark.table(name)
+    try:
+        return drain(sessionize_tws(read_events_stream(spark, sf_dir)), "update")
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
 
 
 def run_sessionize_tws_or_twin_availablenow(
@@ -732,28 +656,9 @@ def run_ewma_availablenow(
     """Drain the events source through the stateful EWMA; update mode
     re-emits users across batches — keep each user's final row (max
     observed event count)."""
-    name = f"stream_ewma_{uuid.uuid4().hex[:8]}"
-    q = (
-        ewma_stateful(read_events_stream(spark, sf_dir), alpha=alpha)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_ewma_"))
-        .start()
-    )
-    q.awaitTermination()
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc(F.col("n_settled") + F.col("n_pending"))
-    )
-    return (
-        spark.table(name)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    ewma = ewma_stateful(read_events_stream(spark, sf_dir), alpha=alpha)
+    progress = F.col("n_settled") + F.col("n_pending")
+    return final_per_user(drain(ewma, "update"), progress)
 
 
 def read_media_stream(spark: SparkSession, media_dir: str, glob: str = "*.png") -> DataFrame:
@@ -829,18 +734,8 @@ def run_media_features_availablenow(
     checkpoint + memory sink, so every call re-decodes the full
     directory).  For the incremental exactly-once pattern use
     :func:`run_media_features_incremental`."""
-    name = f"stream_media_{uuid.uuid4().hex[:8]}"
-    q = (
-        media_features_stream(read_media_stream(spark, media_dir, glob))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    media = media_features_stream(read_media_stream(spark, media_dir, glob))
+    return drain(media, "append")
 
 
 def run_media_features_incremental(

@@ -1573,8 +1573,7 @@ def test_pagerank_hand_graphs(spark):
 def test_pagerank_distributed_matches_driver_twin(spark):
     """The Pregel loop and the driver power method are the SAME math
     (value-sorted folds, identical bracketing): bit-equal ranks on a
-    skewed graph with dangling nodes, and pagerank_auto picks either
-    path without changing a single bit."""
+    skewed graph with dangling nodes."""
     from processo_etl_spark.operators import graph
 
     # hub-and-chain with dangling leaves and a weighted edge
@@ -1591,18 +1590,6 @@ def test_pagerank_distributed_matches_driver_twin(spark):
     }
     assert dist == ref  # bit-for-bit, not approx
     assert abs(sum(dist.values()) - 1.0) < 1e-9
-    # auto: small graph -> driver path; forced distributed -> same bits
-    auto_small = {
-        r["node"]: r["pagerank"]
-        for r in graph.pagerank_auto(edf, 0.85, 7).collect()
-    }
-    auto_dist = {
-        r["node"]: r["pagerank"]
-        for r in graph.pagerank_auto(
-            edf, 0.85, 7, driver_max_nodes=0
-        ).collect()
-    }
-    assert auto_small == ref == auto_dist
 
 
 def test_pagerank_distributed_plain_sum_no_dangling(spark):

@@ -35,11 +35,6 @@ def test_stateful_sessionizer_across_micro_batches(spark, tmp_path):
     files and force one file per trigger, so most users' sessions span
     batches.  A sessionizer that only folds within a batch would
     overcount sessions at every batch boundary."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql import functions as F
-
     from processo_etl_spark import catalog
     from processo_etl_spark.streaming import jobs
 
@@ -54,25 +49,9 @@ def test_stateful_sessionizer_across_micro_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    name = f"mb_{uuid.uuid4().hex[:8]}"
-    q = (
-        jobs.sessionize_stateful(stream, gap_seconds=1800)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_mb_"))
-        .start()
-    )
-    q.awaitTermination()
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    final = (
-        spark.table(name)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    final = jobs.final_per_user(
+        jobs.drain(jobs.sessionize_stateful(stream, gap_seconds=1800), "update"),
+        F.col("n_events"),
     )
     batch = plans.all_queries()["sessionize_gap"](spark, SF_DIR)
     cols = ["user_id", "n_sessions", "n_events"]
@@ -86,8 +65,6 @@ def test_sessionizer_watermark_finalization(spark, tmp_path):
     import glob
     import os
     import shutil
-    import tempfile
-    import uuid
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
@@ -118,30 +95,61 @@ def test_sessionizer_watermark_finalization(spark, tmp_path):
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "1 hour")
     )
-    name = f"wm_{uuid.uuid4().hex[:8]}"
-    q = (
-        jobs.sessionize_stateful(stream, 1800, finalize_by_watermark=True)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_wm_"))
-        .start()
-    )
-    q.awaitTermination()
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    final = (
-        spark.table(name)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    rows = final.collect()
+    sessions = jobs.sessionize_stateful(stream, 1800, finalize_by_watermark=True)
+    rows = jobs.final_per_user(
+        jobs.drain(sessions, "update"), F.col("n_events")
+    ).collect()
     batch = {(r["user_id"], r["n_sessions"], r["n_events"]) for r in
              plans.all_queries()["sessionize_gap"](spark, SF_DIR).collect()}
     assert {(r["user_id"], r["n_sessions"], r["n_events"]) for r in rows} == batch
     # Eviction really happened: open state is a small fraction of totals.
     assert max(r["n_open"] for r in rows) < min(r["n_sessions"] for r in rows) / 2
+
+
+def test_drain_leaves_no_checkpoint_or_view(spark):
+    """A drained registry stream query leaves no ``ck_*`` checkpoint
+    directory and no ``stream_*`` temp view behind, and its result still
+    collects after both are gone."""
+    import glob
+    import os
+    import tempfile
+
+    def checkpoints():
+        return len(glob.glob(os.path.join(tempfile.gettempdir(), "ck_*")))
+
+    before = checkpoints()
+    rows = plans.all_queries()["stream_tumbling_counts"](spark, SF_DIR).collect()
+    assert len(rows) > 0
+    assert checkpoints() == before
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_")]
+    assert views == []
+
+
+def test_tws_runner_restores_state_store_provider(spark, monkeypatch):
+    """The TWS runner sets the session-wide state-store provider for its
+    drain only: a failing drain must still restore the caller's value,
+    and an unset provider must stay unset."""
+    key = "spark.sql.streaming.stateStore.providerClass"
+    hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+
+    def failing_drain(df, output_mode):
+        assert "RocksDB" in spark.conf.get(key)
+        raise RuntimeError("drain failed")
+
+    monkeypatch.setattr(jobs, "read_events_stream", lambda spark, sf_dir: None)
+    monkeypatch.setattr(jobs, "sessionize_tws", lambda events: events)
+    monkeypatch.setattr(jobs, "drain", failing_drain)
+    try:
+        for prior in (None, hdfs):
+            if prior is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prior)
+            with pytest.raises(RuntimeError, match="drain failed"):
+                jobs.run_sessionize_tws_availablenow(spark, SF_DIR)
+            assert spark.conf.get(key, None) == prior
+    finally:
+        spark.conf.unset(key)
 
 
 def test_insert_if_absent_anti_join(spark):
@@ -362,9 +370,9 @@ def test_stream_ewma_equals_batch_across_ordered_batches(spark, tmp_path):
     mid-stream.  Every user's final provisional ewma must equal the
     batch operator's last value bit-for-bit, and settling must actually
     have happened (the bounded-state claim is real, not vacuous)."""
-    import tempfile
     import time
-    import uuid
+
+    from pyspark.sql import Window
 
     from processo_etl_spark import catalog
     from processo_etl_spark.operators import temporal
@@ -395,28 +403,12 @@ def test_stream_ewma_equals_batch_across_ordered_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src / "b*"))
     )
-    name = f"ewma_mb_{uuid.uuid4().hex[:8]}"
-    q = (
-        jobs.ewma_stateful(stream, alpha=0.25, watermark="1 second")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_ewma_mb_"))
-        .start()
-    )
-    q.awaitTermination()
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc(F.col("n_settled") + F.col("n_pending"))
-    )
+    ewma = jobs.ewma_stateful(stream, alpha=0.25, watermark="1 second")
     final = {
         r["user_id"]: r
-        for r in spark.table(name)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .collect()
+        for r in jobs.final_per_user(
+            jobs.drain(ewma, "update"), F.col("n_settled") + F.col("n_pending")
+        ).collect()
     }
     batch = temporal.ewma_per_key(
         ev, "user_id", ["ts", "event_id"], "value", alpha=0.25
